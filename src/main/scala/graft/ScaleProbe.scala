@@ -183,14 +183,13 @@ object ScaleProbe {
           map(lit("label"), col("label").cast("string")).as("metadata"))
         val pgv = graft.connectors.ConnectorRegistry("pgvector")
         val hi = factor.toLong * 2000L * 10L // comfortably past the shifted ids
-        val binConn = conn ++ Map(
-          "query_protocol" -> "extended", "data_format" -> "binary")
         def load(re: Boolean) = graft.config.LoadSpec(
           collection = "probe_wire", recreate = re, batchSize = 500)
-        // the write laws side by side, text and binary framing. DIRECT =
-        // recreate loads COPY straight into the target (no second
-        // server-side write); STAGED = recreate=false onto the now-full
-        // table — the honest upsert regime, every id's delete leg matches
+        // one row per write mode. DIRECT = recreate loads COPY straight
+        // into the target (no second server-side write); STAGED =
+        // recreate=false onto the now-full table — the honest upsert
+        // regime, every id's delete leg matches. INSERT = per-row binary
+        // Bind/Execute pairs in chunked Sync windows inside BEGIN/COMMIT.
         time("pgwire upsert write INSERT (8 conns)")(
           pgv.write(canon.repartition(8), conn + ("write_mode" -> "insert"),
             load(true)).written)
@@ -198,28 +197,8 @@ object ScaleProbe {
           pgv.write(canon.repartition(8), conn, load(true)).written)
         time("pgwire write COPY staged (8 conns)")(
           pgv.write(canon.repartition(8), conn, load(false)).written)
-        time("pgwire write COPY-BIN direct (8 conns)")(
-          pgv.write(canon.repartition(8), binConn, load(true)).written)
-        time("pgwire write COPY-BIN staged (8 conns)")(
-          pgv.write(canon.repartition(8), binConn, load(false)).written)
-        // extended-protocol pipeline: per-row Bind/Execute pairs in
-        // chunked Sync windows inside BEGIN/COMMIT — pays a per-row
-        // statement where multi-VALUES amortizes one parse per 500 rows;
-        // measured so the no-escaping-surface choice has a visible price
-        time("pgwire upsert write EXT (8 conns)")(
-          pgv.write(canon.repartition(8),
-            conn ++ Map("write_mode" -> "insert", "query_protocol" -> "extended"),
-            load(true)).written)
-        time("pgwire upsert write EXT-BIN (8 conns)")(
-          pgv.write(canon.repartition(8), binConn + ("write_mode" -> "insert"),
-            load(true)).written)
         time("pgwire ranged read (8 conns)")(
           pgv.read(spark, conn ++ Map("partitions" -> "8",
-              "lower_bound" -> "0", "upper_bound" -> hi.toString),
-            graft.config.QuerySpec(collection = "probe_wire", idColumn = "id",
-              vectorColumn = Some("vector"))).count())
-        time("pgwire ranged read BIN (8 conns)")(
-          pgv.read(spark, binConn ++ Map("partitions" -> "8",
               "lower_bound" -> "0", "upper_bound" -> hi.toString),
             graft.config.QuerySpec(collection = "probe_wire", idColumn = "id",
               vectorColumn = Some("vector"))).count())
@@ -231,17 +210,12 @@ object ScaleProbe {
         val proxy = new graft.connectors.pgwire.LatencyProxy(pg.port, delayMs = 5)
         try {
           val lconn = conn + ("port" -> proxy.port.toString)
-          val lbin = binConn + ("port" -> proxy.port.toString)
           time("pgwire 10msRTT COPY staged (8)")(
             pgv.write(canon.repartition(8), lconn, load(false)).written)
-          time("pgwire 10msRTT COPY-BIN direct (8)")(
-            pgv.write(canon.repartition(8), lbin, load(true)).written)
+          time("pgwire 10msRTT COPY direct (8)")(
+            pgv.write(canon.repartition(8), lconn, load(true)).written)
           time("pgwire 10msRTT INSERT (8)")(
             pgv.write(canon.repartition(8), lconn + ("write_mode" -> "insert"),
-              load(true)).written)
-          time("pgwire 10msRTT EXT (8)")(
-            pgv.write(canon.repartition(8),
-              lconn ++ Map("write_mode" -> "insert", "query_protocol" -> "extended"),
               load(true)).written)
         } finally proxy.close()
       } finally pg.stop()

@@ -15,58 +15,43 @@ import graft.model.Canonical
   * face, it is verified against a LIVE PostgreSQL server in this repo's
   * own test suite (`PgLiveWireSpec`).
   *
-  * Fidelity to the JDBC face:
-  *  - the SELECT is the connector's own [[PgVectorConnector.buildSelect]]
-  *    output, consumed per PARTITION with an id-range predicate when
-  *    `partitions`/`lower_bound`/`upper_bound` are declared — the same
-  *    range-split contract as the JDBC reader;
-  *  - the write lands the same (id TEXT, vector VECTOR(d), metadata TEXT)
-  *    table the JDBC dialect creates. On an extension-less server the
-  *    `VECTOR(d)` DDL fails with SQLSTATE 42704 and the column falls back
-  *    to TEXT with ONE loud warning — vectors travel in pgvector's text
-  *    form (`'[x,y,z]'`) either way, so the readBack codec decodes both;
-  *  - each executor partition drives its own connection with
-  *    `batch_size`-row multi-VALUES INSERTs (the reference batches 100
-  *    rows per executemany, `adapters/pgvector.py:159`); values are
-  *    single-quoted literals with `''` escaping (standard_conforming_
-  *    strings, the server default since 9.1) and NUL bytes rejected
-  *    loudly — PostgreSQL text cannot carry them.
+  * ONE data path, binary format throughout; values always travel as
+  * length-prefixed binary fields or Bind parameters, never as SQL text,
+  * so no literal escaping exists on the data path:
+  *  - reads: the connector's own [[PgVectorConnector.buildSelect]] per
+  *    id-range slice through the Extended Query protocol — Parse,
+  *    Describe, then a Bind that requests binary for every column whose
+  *    type OID this client decodes text-exactly ([[pgwire.PgBinary
+  *    .textExactOids]]) and text for the rest (per-column negotiation);
+  *  - `write_mode=copy` (default): `COPY … WITH (FORMAT binary)`, direct
+  *    into the target under `recreate`, otherwise into a TEMP stage that
+  *    one statement publishes as an id-keyed upsert;
+  *  - `write_mode=insert`: pipelined binary Bind/Execute delete+insert
+  *    pairs, one explicit transaction per `batch_size` rows.
   *
-  * Limits vs JDBC (documented, not hidden): Simple Query protocol by
-  * default (`query_protocol=extended` adds Parse/Bind/Execute;
-  * `data_format=binary` negotiates binary formats on the data path —
-  * binary COPY framing on writes, per-column binary results on extended
-  * reads); auth = trust,
-  * cleartext, MD5, or SCRAM-SHA-256 via the `password` connection key;
-  * TLS via `ssl=require` (+ optional `ssl_root_cert` PEM pinning —
-  * absent means the platform trust store); `limit`/`offset` force a
-  * single-range read (a per-partition LIMIT would multiply it). */
+  * The write lands the same (id TEXT, vector VECTOR(d), metadata TEXT)
+  * table the JDBC dialect creates. On an extension-less server the
+  * `VECTOR(d)` DDL fails with SQLSTATE 42704 and the column falls back
+  * to TEXT with ONE loud warning; a real `VECTOR(d)` column takes
+  * pgvector's `vector_send`/`vector_recv` binary framing (not
+  * live-verified here: no server in this repo's tests has the extension).
+  *
+  * Limits vs JDBC (documented, not hidden): auth = trust, cleartext, MD5,
+  * or SCRAM-SHA-256 via the `password` connection key; TLS via
+  * `ssl=require` (+ optional `ssl_root_cert` PEM pinning — absent means
+  * the platform trust store); `limit`/`offset` force a single-range read
+  * (a per-partition LIMIT would multiply it). The removed
+  * `query_protocol`/`data_format` keys are accepted only with the value
+  * of the one remaining path (`extended`/`binary`). */
 object PgWireFace {
 
   def enabled(connection: Map[String, String]): Boolean =
     connection.get("protocol").contains("wire")
 
-  /** `query_protocol=extended`: route reads and insert-mode writes
-    * through the Extended Query protocol (Parse/Bind/Execute) — values
-    * travel as Bind PARAMETERS, so the SQL text never carries data and
-    * the literal-escaping surface disappears from the data path. COPY
-    * mode already has no literals (rows ride the COPY sub-protocol). */
-  def extendedEnabled(connection: Map[String, String]): Boolean =
-    connection.get("query_protocol").contains("extended")
-
-  /** `data_format=binary`: negotiate the BINARY wire format on the data
-    * path. Writes: COPY streams `FORMAT binary` framing (and extended-
-    * mode upserts bind binary parameters); a real `VECTOR(d)` column
-    * crosses as float4s — 4 bytes/component vs ~9-13 text chars, the
-    * dominant byte tax on a vector migration — and TEXT columns skip
-    * the per-character escape scan. Reads (extended protocol only — the
-    * Simple Query protocol is text-by-definition): Describe the
-    * prepared scan, then Bind requests format 1 for every column whose
-    * type OID this client decodes text-exactly ([[pgwire.PgBinary
-    * .textExactOids]]) and format 0 for the rest — per-column
-    * negotiation, never all-or-nothing. */
-  def binaryEnabled(connection: Map[String, String]): Boolean =
-    connection.get("data_format").contains("binary")
+  /** Removed options, each with the only value it may still carry: older
+    * configs naming the path that remains keep running unchanged; any
+    * other value asked for a data path that no longer exists. */
+  private val RemovedOptions = Seq("query_protocol" -> "extended", "data_format" -> "binary")
 
   /** Sync-window cap for the extended-protocol pipelined upsert: ~256
     * unread per-statement responses (~5 KB) between reads — far under
@@ -87,7 +72,12 @@ object PgWireFace {
       new PgWireClient(host, port, user, database, password, ssl, sslRootCert)
   }
 
-  private[connectors] def endpoint(connection: Map[String, String]): PgEndpoint =
+  private[connectors] def endpoint(connection: Map[String, String]): PgEndpoint = {
+    RemovedOptions.foreach { case (k, kept) =>
+      connection.get(k).filterNot(_ == kept).foreach(v => throw new IllegalArgumentException(
+        s"$k=$v is no longer supported: the $k option was removed and the " +
+          s"pgvector wire face always uses $k=$kept; drop the key"))
+    }
     PgEndpoint(
       connection.getOrElse("host", "localhost"),
       connection.getOrElse("port", "5432").toInt,
@@ -96,16 +86,6 @@ object PgWireFace {
       connection.get("password").filter(_.nonEmpty),
       connection.get("ssl").exists(v => Set("true", "require", "on")(v.toLowerCase)),
       connection.get("ssl_root_cert").filter(_.nonEmpty))
-
-  /** Single-quoted SQL text literal: `''`-escaped, NULs rejected loudly
-    * (PostgreSQL text cannot carry them — silently stripping one would
-    * alter user data). Identifiers never ride this path — they go
-    * through the connector's whitelist (`ident`). */
-  private[connectors] def sqlLit(v: String): String = {
-    if (v == null) return "NULL"
-    require(!v.contains('\u0000'),
-      "PostgreSQL text literals cannot carry NUL (\\u0000) bytes")
-    "'" + v.replace("'", "''") + "'"
   }
 
   private def withClient[A](connection: Map[String, String])(f: PgWireClient => A): A = {
@@ -147,10 +127,11 @@ object PgWireFace {
   }
 
   /** Partitioned wire read: the connector's pushdown SELECT per id-range
-    * slice (one wire connection per Spark partition), text-format rows
-    * decoded through the SAME codec as the JDBC path. Without declared
-    * bounds — or with a limit/offset, which cannot split — ONE range,
-    * exactly the JDBC reader's behavior without a partitionColumn.
+    * slice (one wire connection per Spark partition), each cell rendered
+    * as the server's text form and the vector decoded through the SAME
+    * codec as the JDBC path. Without declared bounds — or with a
+    * limit/offset, which cannot split — ONE range, exactly the JDBC
+    * reader's behavior without a partitionColumn.
     *
     * TYPE-ADAPTIVE slicing (one catalog probe at plan time): a numeric
     * id column compares directly; a TEXT id column — which includes
@@ -213,44 +194,31 @@ object PgWireFace {
           else slices :+ withPred(s"NOT ($digits) OR $idc IS NULL")
         case _ => Seq(query)
       }
-    val ext = extendedEnabled(connection)
-    // binary rides the extended protocol only: Simple Query results are
-    // text by definition (no Bind to carry format codes)
-    val bin = binaryEnabled(connection) && ext
-    val sqls = ranged.map(q => sqlSide.buildSelect(q, rawVector = bin))
+    val sqls = ranged.map(q => sqlSide.buildSelect(q, rawVector = true))
     val ep = endpoint(connection)
     // the `vector` type OID is extension-ASSIGNED (not a stable
     // built-in) — one plan-time catalog probe, shipped to every slice;
     // None on an extension-less server, where the column is TEXT anyway
-    val vecOid: Option[Int] =
-      if (!bin) None
-      else withClient(connection) { c =>
-        c.query("SELECT oid FROM pg_type WHERE typname = 'vector'")
-          .rows.headOption.map(_.head.toInt)
-      }
+    val vecOid: Option[Int] = withClient(connection) { c =>
+      c.query("SELECT oid FROM pg_type WHERE typname = 'vector'")
+        .rows.headOption.map(_.head.toInt)
+    }
     val rdd = spark.sparkContext.parallelize(sqls, sqls.length).flatMap { sql =>
       val c = ep.connect()
-      // query_protocol=extended runs each slice through Parse/Bind/
-      // Execute (unnamed statement, text results) — same rows, prepared
-      // plumbing exercised end to end. data_format=binary adds the
-      // Describe step and per-column format negotiation.
       try {
-        if (bin) {
-          c.prepare("graft_read", sql)
-          val desc = c.describeStatement("graft_read")
-          val exact = pgwire.PgBinary.textExactOids(vecOid)
-          val formats = desc.map { case (_, oid) => if (exact(oid)) 1 else 0 }
-          val res = c.execPreparedRaw("graft_read", Nil, Nil, formats)
-          res.rows.map { r =>
-            Row.fromSeq(r.zipWithIndex.map { case (cell, i) =>
-              if (cell == null) null
-              else if (res.formats(i) == 1)
-                pgwire.PgBinary.recvToText(res.oids(i), vecOid, cell)
-              else new String(cell, java.nio.charset.StandardCharsets.UTF_8)
-            })
-          }
+        c.prepare("graft_read", sql)
+        val desc = c.describeStatement("graft_read")
+        val exact = pgwire.PgBinary.textExactOids(vecOid)
+        val formats = desc.map { case (_, oid) => if (exact(oid)) 1 else 0 }
+        val res = c.execPreparedRaw("graft_read", Nil, Nil, formats)
+        res.rows.map { r =>
+          Row.fromSeq(r.zipWithIndex.map { case (cell, i) =>
+            if (cell == null) null
+            else if (res.formats(i) == 1)
+              pgwire.PgBinary.recvToText(res.oids(i), vecOid, cell)
+            else new String(cell, java.nio.charset.StandardCharsets.UTF_8)
+          })
         }
-        else (if (ext) c.execParams(sql) else c.query(sql)).rows.map(Row.fromSeq(_))
       } finally c.close()
     }
     val raw = spark.createDataFrame(rdd,
@@ -269,16 +237,15 @@ object PgWireFace {
     * duplicating ids (the standing insert-only hazard of append sinks):
     *
     *  - `write_mode=copy` (DEFAULT — PostgreSQL's documented bulk path,
-    *    CopyInResponse/CopyData/CopyDone): each partition COPYs its rows
-    *    into a session-private TEMP staging table, then publishes with
-    *    ONE `DELETE … IN (SELECT id FROM stage); INSERT … SELECT` Simple
-    *    Query — a single implicit transaction, so the whole partition
-    *    lands atomically. COPY text rows skip per-value SQL quoting and
-    *    statement parsing entirely (measured ~3–10× the multi-VALUES
-    *    law; see ScaleProbe).
-    *  - `write_mode=insert`: `batchSize`-row multi-VALUES batches, each
-    *    ONE `DELETE …; INSERT …` statement string (implicit-txn atomic
-    *    per batch) — the fallback for servers that restrict COPY.
+    *    CopyInResponse/CopyData/CopyDone in `FORMAT binary`): each
+    *    partition COPYs its rows into a session-private TEMP staging
+    *    table, then publishes with ONE `DELETE … IN (SELECT id FROM
+    *    stage); INSERT … SELECT` statement — a single implicit
+    *    transaction, so the whole partition lands atomically. Under
+    *    `recreate` the rows COPY straight into the target instead.
+    *  - `write_mode=insert`: per `batchSize` rows, one BEGIN/COMMIT
+    *    around pipelined binary Bind/Execute delete+insert pairs — the
+    *    fallback for servers that restrict COPY.
     *
     * The row count rides the write action via `Dataset.observe` — no
     * second pass. */
@@ -314,43 +281,34 @@ object PgWireFace {
       c.query(s"CREATE INDEX IF NOT EXISTS ${table.replace('.', '_')}_graft_id_ix " +
         s"ON $table (${ddlCols._1})")
     }
-    val useCopy0 = !connection.get("write_mode").contains("insert")
+    val useCopy = !connection.get("write_mode").contains("insert")
     // COPY mode stages through a session-private TEMP table; pg_temp
     // precedes every schema on the search path, so a TARGET named like
     // the stage would make the publish statement's unqualified
     // references resolve to the temp table — rows would land nowhere
     // while the report claims success. Reject the collision loudly.
-    if (useCopy0)
+    if (useCopy)
       require(!table.split('.').last.equalsIgnoreCase("graft_copy_stage"),
         s"collection name '$table' collides with the COPY staging table " +
           "(pg_temp shadows it on the search path) — rename the " +
           "collection or use write_mode=insert")
-    val bin = binaryEnabled(connection)
-    val ext = extendedEnabled(connection)
-    // the COPY staging table must parse the same text the TARGET column
-    // parses — and the target's actual type comes from the CATALOG, not
+    // the binary vector field (and the COPY stage's DDL) must match the
+    // TARGET column — and its actual type comes from the CATALOG, not
     // from which DDL branch ran: `CREATE TABLE IF NOT EXISTS` on an
     // already-existing relation short-circuits BEFORE column-type
     // analysis, so the VECTOR probe "succeeds" against a pre-existing
     // TEXT-column table on an extension-less server (caught live by
-    // PgLiveWireSpec's append-mode write). Only the branches that need
-    // the target's actual type pay the catalog round trip: COPY (stage
-    // DDL + binary field encoding) and binary extended (vector
-    // parameter encoding).
-    val vecType = if (!useCopy0 && !(ext && bin)) "TEXT" else {
-      val si = schemaInfo(connection, table)
-      val isVector = si.schema.fields.exists(f =>
-        f.name.equalsIgnoreCase(ddlCols._2) &&
-          f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-      if (isVector) s"VECTOR($dim)" else "TEXT"
-    }
-    // binary format against a REAL vector column ships the floats
+    // PgLiveWireSpec's append-mode write).
+    val vecFloats = schemaInfo(connection, table).schema.fields.exists(f =>
+      f.name.equalsIgnoreCase(ddlCols._2) &&
+        f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
+    val vecType = if (vecFloats) s"VECTOR($dim)" else "TEXT"
+    // against a REAL vector column the binary field is the floats
     // themselves (vector_send) — the projection keeps the array instead
     // of rendering text the server would only re-parse
-    val vecAsFloats = bin && vecType.startsWith("VECTOR") && (useCopy0 || ext)
     val out = df.select(
       col(Canonical.ID).cast("string"),
-      if (vecAsFloats)
+      if (vecFloats)
         col(Canonical.VECTOR).cast(org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.FloatType))
       else PgVectorCodec.vectorToText(col(Canonical.VECTOR)),
@@ -359,7 +317,6 @@ object PgWireFace {
     val observed = out.observe(obs, count(lit(1)).as("rows"))
     val ep = endpoint(connection)
     val batch = math.max(1, load.batchSize)
-    val prefix = s"INSERT INTO $table (${ddlCols._1}, ${ddlCols._2}, metadata) VALUES "
     // NOTE ids are assumed unique within the written frame (the canonical
     // model's contract — every source connector emits one row per id): a
     // frame carrying the same id twice lands both copies, exactly like
@@ -367,9 +324,6 @@ object PgWireFace {
     // delete leg removes.
     val idCol = ddlCols._1
     val vecCol = ddlCols._2
-    val useCopy = useCopy0
-    val useBin = bin
-    val vecFloats = vecAsFloats
     // Non-upsert DIRECT COPY (recreate loads): the driver just dropped
     // and recreated the target, so the staged path's publish leg would
     // write every row a SECOND time server-side for a delete leg that
@@ -377,14 +331,14 @@ object PgWireFace {
     // safety holds because COPY FROM STDIN is ONE statement in its own
     // implicit transaction: a task failing mid-copy (or aborting with
     // CopyFail) lands ZERO rows, so the re-run is the first landing.
-    val direct = useCopy0 && load.recreate
+    val direct = useCopy && load.recreate
     observed.foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext) {
         val c = ep.connect()
         import graft.connectors.pgwire.PgBinary
-        // shared binary field encoders: TEXT columns are raw UTF-8 in
-        // binary format; the vector field is float4s against a real
-        // VECTOR column, its text rendering otherwise
+        // binary field encoders: TEXT columns are raw UTF-8 in binary
+        // format; the vector field is float4s against a real VECTOR
+        // column, its text rendering otherwise
         def fTxt(r: Row, i: Int): Array[Byte] =
           if (r.isNullAt(i)) null else PgBinary.textSend(r.getString(i))
         def fVec(r: Row): Array[Byte] =
@@ -392,19 +346,42 @@ object PgWireFace {
           else if (vecFloats) PgBinary.vectorSend(r.getSeq[Float](1).toArray)
           else PgBinary.textSend(r.getString(1))
         try {
-          if (!useCopy && ext) {
+          if (useCopy) {
+            val copyTarget =
+              if (direct) s"$table ($idCol, $vecCol, metadata)"
+              else {
+                // per-session TEMP stage: invisible to other connections,
+                // so a half-copied retry never leaks rows; dropped with
+                // the session
+                c.query("CREATE TEMP TABLE graft_copy_stage " +
+                  s"(id TEXT, vector $vecType, metadata TEXT)")
+                "pg_temp.graft_copy_stage (id, vector, metadata)"
+              }
+            c.copyInBinary(s"COPY $copyTarget FROM STDIN WITH (FORMAT binary)",
+              it.map(r => Array(fTxt(r, 0), fVec(r), fTxt(r, 2))))
+            // ONE implicit-txn publish for the whole partition: the
+            // delete leg rides the target's id index; null ids have no
+            // previous version to replace. Direct mode already landed in
+            // the target — no second server-side write.
+            if (!direct) c.query(
+              s"DELETE FROM $table WHERE $idCol IN " +
+                "(SELECT id FROM pg_temp.graft_copy_stage WHERE id IS NOT NULL); " +
+                s"INSERT INTO $table ($idCol, $vecCol, metadata) " +
+                "SELECT id, vector, metadata FROM pg_temp.graft_copy_stage")
+            ()
+          } else {
             // Extended-protocol upsert: named statements prepared once,
             // then per batch a PIPELINE of Bind/Execute pairs (delete leg
-            // before insert per row chunk) with values as parameters.
-            // Batch atomicity rides an EXPLICIT transaction, NOT one
-            // giant Sync window: a Sync inside BEGIN...COMMIT does not
-            // commit (documented), so the batch stays all-or-nothing
-            // while each Sync window is capped at PipeChunk rows —
-            // writing an unbounded pipeline with no intermediate reads
-            // deadlocks once the server's unread BindComplete/
-            // CommandComplete responses fill both socket buffers (the
-            // classic pipelining deadlock libpq's pipeline docs warn
-            // about; a large batch_size would hang the Spark task).
+            // before insert per row chunk) with values as binary
+            // parameters. Batch atomicity rides an EXPLICIT transaction,
+            // NOT one giant Sync window: a Sync inside BEGIN...COMMIT
+            // does not commit (documented), so the batch stays
+            // all-or-nothing while each Sync window is capped at
+            // PipeChunk rows — writing an unbounded pipeline with no
+            // intermediate reads deadlocks once the server's unread
+            // BindComplete/CommandComplete responses fill both socket
+            // buffers (the classic pipelining deadlock libpq's pipeline
+            // docs warn about; a large batch_size would hang the task).
             c.prepare("graft_del", s"DELETE FROM $table WHERE $idCol = $$1")
             c.prepare("graft_ins",
               s"INSERT INTO $table ($idCol, $vecCol, metadata) VALUES ($$1, $$2, $$3)")
@@ -416,24 +393,16 @@ object PgWireFace {
                 // the frame, the canonical contract)
                 g.grouped(PipeChunk).foreach { sub =>
                   sub.foreach { r =>
-                    if (!r.isNullAt(0)) {
-                      if (useBin)
-                        c.bindExecRaw("graft_del", Seq(Option(fTxt(r, 0))), Seq(1))
-                      else c.bindExec("graft_del", Seq(Some(r.getString(0))))
-                    }
+                    if (!r.isNullAt(0))
+                      c.bindExecRaw("graft_del", Seq(Option(fTxt(r, 0))), Seq(1))
                   }
+                  // the prepared statement's inferred column types drive
+                  // the server-side recv (vector_recv for a real VECTOR
+                  // column)
                   sub.foreach { r =>
-                    if (useBin)
-                      // binary parameters: the prepared statement's
-                      // inferred column types drive the server-side recv
-                      // (vector_recv for a real VECTOR column)
-                      c.bindExecRaw("graft_ins",
-                        Seq(Option(fTxt(r, 0)), Option(fVec(r)), Option(fTxt(r, 2))),
-                        Seq(1, 1, 1))
-                    else {
-                      def p(i: Int) = if (r.isNullAt(i)) None else Some(r.getString(i))
-                      c.bindExec("graft_ins", Seq(p(0), p(1), p(2)))
-                    }
+                    c.bindExecRaw("graft_ins",
+                      Seq(Option(fTxt(r, 0)), Option(fVec(r)), Option(fTxt(r, 2))),
+                      Seq(1, 1, 1))
                   }
                   c.syncBatch()
                 }
@@ -447,51 +416,6 @@ object PgWireFace {
                   throw e
               }
             }
-          } else if (useCopy) {
-            val copyTarget =
-              if (direct) s"$table ($idCol, $vecCol, metadata)"
-              else {
-                // per-session TEMP stage: invisible to other connections,
-                // so a half-copied retry never leaks rows; dropped with
-                // the session
-                c.query("CREATE TEMP TABLE graft_copy_stage " +
-                  s"(id TEXT, vector $vecType, metadata TEXT)")
-                "pg_temp.graft_copy_stage (id, vector, metadata)"
-              }
-            if (useBin)
-              c.copyInBinary(s"COPY $copyTarget FROM STDIN WITH (FORMAT binary)",
-                it.map(r => Array(fTxt(r, 0), fVec(r), fTxt(r, 2))))
-            else {
-              import graft.connectors.pgwire.PgWireClient.copyField
-              c.copyIn(s"COPY $copyTarget FROM STDIN",
-                it.map { r =>
-                  def f(i: Int) = copyField(if (r.isNullAt(i)) null else r.getString(i))
-                  s"${f(0)}\t${f(1)}\t${f(2)}"
-                })
-            }
-            // ONE implicit-txn publish for the whole partition: the
-            // delete leg rides the target's id index; null ids have no
-            // previous version to replace. Direct mode already landed in
-            // the target — no second server-side write.
-            if (!direct) c.query(
-              s"DELETE FROM $table WHERE $idCol IN " +
-                "(SELECT id FROM pg_temp.graft_copy_stage WHERE id IS NOT NULL); " +
-                s"INSERT INTO $table ($idCol, $vecCol, metadata) " +
-                "SELECT id, vector, metadata FROM pg_temp.graft_copy_stage")
-            ()
-          } else it.grouped(batch).foreach { g =>
-            val values = g.map { r =>
-              def lit(i: Int) = if (r.isNullAt(i)) "NULL" else sqlLit(r.getString(i))
-              s"(${lit(0)}, ${lit(1)}, ${lit(2)})"
-            }.mkString(", ")
-            // delete leg first, SAME statement: id-keyed upsert, atomic per
-            // batch (null ids have no previous version to replace — IN with
-            // no non-null members is simply omitted)
-            val ids = g.collect { case r if !r.isNullAt(0) => sqlLit(r.getString(0)) }
-            val del =
-              if (ids.isEmpty) ""
-              else s"DELETE FROM $table WHERE $idCol IN (${ids.mkString(", ")}); "
-            c.query(del + prefix + values)
           }
         } finally c.close()
       }

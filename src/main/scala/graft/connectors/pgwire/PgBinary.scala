@@ -8,13 +8,12 @@ import java.nio.charset.StandardCharsets.UTF_8
   * pgvector's published binary format (pgvector README / `vector_send`:
   * uint16 dim, uint16 unused = 0, then dim float4s).
   *
-  * Why binary exists here: vectors are the dominant bytes on a migration,
-  * and the text form (`[0.12345678,...]`, ~9-13 chars per component)
-  * costs 2-3× the bytes of float4 binary — the r18 verdict named text
-  * framing the single biggest remaining tax on the engine's only
-  * live-verifiable backend. For TEXT-typed columns the binary form is the
-  * raw UTF-8 bytes (no `\N`/backslash escaping pass at all), so binary
-  * COPY also removes the per-character escape scan from the hot path.
+  * Why binary is the wire face's only data format: vectors are the
+  * dominant bytes on a migration, and the text form (`[0.12345678,...]`,
+  * ~9-13 chars per component) costs 2-3× the bytes of float4 binary. For
+  * TEXT-typed columns the binary form is the raw UTF-8 bytes (no
+  * `\N`/backslash escaping pass at all), so binary COPY also keeps a
+  * per-character escape scan off the hot path.
   *
   * Everything below is pure byte math on arrays — no socket, no state —
   * so the encoders/decoders are unit-tested offline byte for byte, and
@@ -59,9 +58,10 @@ object PgBinary {
 
   // ---- value send (client -> server binary parameter / COPY field) ----
   /** TEXT/VARCHAR binary format IS the raw UTF-8 bytes. NUL is rejected
-    * exactly like the text paths — PostgreSQL text cannot carry it, and
-    * binary framing reaching the server first would turn the client-side
-    * contract error into a server-side 22021. */
+    * here — the one place the wire data path turns a string into bytes:
+    * PostgreSQL text cannot carry it (silently stripping one would alter
+    * user data), and binary framing reaching the server first would turn
+    * the client-side contract error into a server-side 22021. */
   def textSend(v: String): Array[Byte] = {
     require(!v.contains('\u0000'),
       "PostgreSQL text values cannot carry NUL (\\u0000) bytes")

@@ -87,32 +87,6 @@ private final class ScramState(password: String,
   }
 }
 
-object PgWireClient {
-  /** One COPY text-format field: `\N` for NULL, otherwise the documented
-    * backslash escapes (backslash itself, tab, newline, carriage return —
-    * the characters that would break the row/field framing). NUL bytes
-    * are rejected like every other text path (PostgreSQL text cannot
-    * carry them). */
-  def copyField(v: String): String = {
-    if (v == null) return "\\N"
-    require(!v.contains('\u0000'),
-      "PostgreSQL text literals cannot carry NUL (\\u0000) bytes")
-    val sb = new java.lang.StringBuilder(v.length + 8)
-    var i = 0
-    while (i < v.length) {
-      v.charAt(i) match {
-        case '\\' => sb.append("\\\\")
-        case '\t' => sb.append("\\t")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case c => sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
-  }
-}
-
 /** One statement's outcome on the wire: the last result set's column
   * names and text-format rows (empty for DDL/DML), plus every
   * `CommandComplete` tag the statement batch produced ("CREATE TABLE",
@@ -133,26 +107,29 @@ case class PgResultRaw(columns: Seq[String], oids: Seq[Int], formats: Seq[Int],
                        rows: Seq[Seq[Array[Byte]]], tags: Seq[String])
 
 /** Minimal PostgreSQL frontend — the documented v3 wire protocol
-  * (PostgreSQL docs, "Frontend/Backend Protocol"), Simple Query flavor:
-  * `StartupMessage` → authentication (trust, cleartext password, MD5,
-  * or SASL SCRAM-SHA-256 with server-signature verification — the
-  * PostgreSQL default since v14) → `Query('Q')` with text-format
-  * results. TLS rides the documented SSLRequest upgrade: platform-trust
+  * (PostgreSQL docs, "Frontend/Backend Protocol"): `StartupMessage` →
+  * authentication (trust, cleartext password, MD5, or SASL SCRAM-SHA-256
+  * with server-signature verification — the PostgreSQL default since
+  * v14). TLS rides the documented SSLRequest upgrade: platform-trust
   * mode verifies chain AND hostname (verify-full); a pinned
-  * `ssl_root_cert` is verify-ca against that one anchor. The Extended
-  * Query protocol (Parse/Bind/Execute — [[prepare]]/[[bindExec]]/
-  * [[execParams]]) carries values as parameters; `COPY FROM STDIN`
-  * ([[copyIn]]) is the bulk path. Text format only — this is still NOT
-  * a general JDBC replacement; it
-  * exists so the engine's hand-built SQL
-  * surface — the pgvector connector's `buildSelect` / catalog
-  * predicates / DDL shapes and the vector text codec — can be verified
-  * against a LIVE PostgreSQL server in environments where the JDBC
-  * driver jar is absent (this repo's offline sandbox), and so the
-  * connector's wire face ([[graft.connectors.PgWireFace]]) can carry
-  * real reads/writes there. The reference drives the same statements
-  * through psycopg2 (`adapters/pgvector.py`); here the statements
-  * themselves are the contract under test.
+  * `ssl_root_cert` is verify-ca against that one anchor.
+  *
+  * Three statement paths: [[query]] (Simple Query, text results) for
+  * DDL, catalog probes and publish statements; the Extended Query
+  * protocol with explicit per-value format codes — [[prepare]],
+  * [[describeStatement]], [[execPreparedRaw]] for binary-negotiated
+  * reads and pipelined [[bindExecRaw]]/[[syncBatch]] for binary
+  * parameter writes; and `COPY ... FROM STDIN WITH (FORMAT binary)`
+  * ([[copyInBinary]]) for bulk loads. This is still NOT a general JDBC
+  * replacement; it exists so the engine's hand-built SQL surface — the
+  * pgvector connector's `buildSelect` / catalog predicates / DDL shapes
+  * and the vector codec — can be verified against a LIVE PostgreSQL
+  * server in environments where the JDBC driver jar is absent (this
+  * repo's offline sandbox), and so the connector's wire face
+  * ([[graft.connectors.PgWireFace]]) can carry real reads/writes there.
+  * The reference drives the same statements through psycopg2
+  * (`adapters/pgvector.py`); here the statements themselves are the
+  * contract under test.
   *
   * Thread-safety: none — one client per connection, like a raw socket. */
 class PgWireClient(host: String, port: Int,
@@ -232,10 +209,10 @@ class PgWireClient(host: String, port: Int,
   }
   private val in = new DataInputStream(socket.getInputStream)
   // buffered: the extended-protocol pipeline writes 2-3 small frames per
-  // row (writeBind/writeExecute never flush) — unbuffered with
+  // row (writeBindRaw/writeExecute never flush) — unbuffered with
   // TCP_NODELAY that is a syscall and potentially a packet per frame.
   // Every read site is preceded by an explicit flush (send/sendSync/
-  // query/copyIn), so buffering changes no protocol timing.
+  // query/copyInStream), so buffering changes no protocol timing.
   private val out = new DataOutputStream(
     new java.io.BufferedOutputStream(socket.getOutputStream, 1 << 16))
 
@@ -453,7 +430,7 @@ class PgWireClient(host: String, port: Int,
         case 'G' => // CopyInResponse through plain query(): the server now
           // waits for CopyData and would hang the session — abort with
           // CopyFail so the statement fails typed instead
-          val m = "COPY FROM STDIN requires copyIn()".getBytes(UTF_8) :+ 0.toByte
+          val m = "COPY FROM STDIN requires copyInBinary()".getBytes(UTF_8) :+ 0.toByte
           out.writeByte('f')
           out.writeInt(4 + m.length)
           out.write(m)
@@ -468,14 +445,16 @@ class PgWireClient(host: String, port: Int,
   // ---- Extended Query protocol (Parse/Bind/Execute/Sync) ----
   // Parameterized statements: user VALUES travel as Bind parameters, so
   // the SQL text never carries data — no quoting/escaping surface at
-  // all. Text format both ways (format code 0); an implicit transaction
-  // spans everything up to Sync, which is what makes a pipelined
-  // delete+insert batch atomic ([[PgWireFace]]'s extended write mode).
+  // all. Every Bind names its format codes explicitly; an implicit
+  // transaction spans everything up to Sync, which is what makes a
+  // pipelined batch atomic.
 
   private def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
 
   /** Parse a NAMED prepared statement (Parse + Sync, drained) — call once
-    * per connection, then pipeline [[bindExec]]/[[syncBatch]] against it. */
+    * per connection, then pipeline [[bindExecRaw]]/[[syncBatch]] against
+    * it, or Describe/execute it with [[describeStatement]]/
+    * [[execPreparedRaw]]. */
   def prepare(name: String, sql: String): Unit = {
     val b = new java.io.ByteArrayOutputStream()
     b.write(cstr(name))
@@ -485,16 +464,6 @@ class PgWireClient(host: String, port: Int,
     sendSync()
     drainExtended()
   }
-
-  /** Queue ONE Bind("", stmt, params) + Execute("") pair — NOT flushed;
-    * the round trip happens at [[syncBatch]]. `None` binds SQL NULL. */
-  def bindExec(stmt: String, params: Seq[Option[String]]): Unit = {
-    writeBind(stmt, params)
-    writeExecute()
-  }
-
-  private def writeBind(stmt: String, params: Seq[Option[String]]): Unit =
-    writeBindRaw(stmt, params.map(_.map(_.getBytes(UTF_8))), Nil, Nil)
 
   /** Bind with explicit format codes (the protocol's negotiation point):
     * `paramFormats`/`resultFormats` follow the documented convention —
@@ -539,44 +508,17 @@ class PgWireClient(host: String, port: Int,
   /** Close the pipeline: Sync, then drain every queued statement's
     * results to ReadyForQuery. Everything since the last Sync ran in ONE
     * implicit transaction — on the first error the server skips the rest
-    * and rolls the transaction back, so a [[bindExec]] batch is atomic. */
-  def syncBatch(): PgResult = {
+    * and rolls the transaction back, so a [[bindExecRaw]] batch is atomic.
+    * Raises the first error AFTER ReadyForQuery (same session-survives
+    * contract as [[query]]). */
+  def syncBatch(): Unit = {
     sendSync()
     drainExtended()
   }
 
-  /** One-shot parameterized statement through the unnamed prepared
-    * statement: Parse + Bind + Describe + Execute + Sync in a single
-    * flush, results in text format. The read-side twin of [[bindExec]] —
-    * `sql` carries `$1..$n` placeholders and `params` the values. */
-  def execParams(sql: String, params: Seq[Option[String]] = Nil): PgResult = {
-    val p = new java.io.ByteArrayOutputStream()
-    p.write(cstr(""))
-    p.write(cstr(sql))
-    p.write(Array[Byte](0, 0))
-    send('P', p.toByteArray) // send flushes; harmless mid-pipeline
-    writeBind("", params)
-    // Describe the PORTAL between Bind and Execute — RowDescription must
-    // precede the DataRows or the drain's 'T' reset discards them
-    out.writeByte('D')
-    out.writeInt(4 + 1 + 1)
-    out.writeByte('P')
-    out.writeByte(0)
-    writeExecute()
-    syncBatch()
-  }
-
   /** Shared drain for the extended protocol: collects the LAST result
-    * set + all tags, raises the first error AFTER ReadyForQuery (same
-    * session-survives contract as [[query]]). */
-  private def drainExtended(): PgResult = {
-    val raw = drainExtendedRaw()
-    PgResult(raw.columns,
-      raw.rows.map(_.map(b => if (b == null) null else new String(b, UTF_8))),
-      raw.tags)
-  }
-
-  private def drainExtendedRaw(): PgResultRaw = {
+    * set + all tags, raises the first error AFTER ReadyForQuery. */
+  private def drainExtended(): PgResultRaw = {
     var desc = Seq.empty[(String, Int, Int)]
     var rows = Vector.empty[Seq[Array[Byte]]]
     val tags = Vector.newBuilder[String]
@@ -658,7 +600,7 @@ class PgWireClient(host: String, port: Int,
     out.writeByte(0)
     writeExecute()
     sendSync()
-    drainExtendedRaw()
+    drainExtended()
   }
 
   /** Malformed-frame guards for the two payloads with internal structure:
@@ -729,33 +671,19 @@ class PgWireClient(host: String, port: Int,
     parseDataRowRaw(payload, onErr)
       .map(_.map(b => if (b == null) null else new String(b, UTF_8)))
 
-  /** Bulk load through the documented COPY sub-protocol: run a
-    * `COPY ... FROM STDIN` statement, answer the server's CopyInResponse
-    * ('G') by streaming `lines` as text-format CopyData ('d') frames
-    * (chunked, not one frame per row), finish with CopyDone ('c'), and
-    * drain to `ReadyForQuery` exactly like [[query]]. Rows must already
-    * be COPY-text encoded (tab-separated fields, `\N` nulls, backslash
-    * escapes — [[PgWireClient.copyField]] builds a field). The server
-    * reports mid-copy errors only after CopyDone on this path; the
-    * session survives them (same drain contract as query). */
-  def copyIn(sql: String, lines: Iterator[String], chunkBytes: Int = 1 << 16): PgResult =
-    copyInStream(sql, chunkBytes) { (buf, flushChunk) =>
-      lines.foreach { line =>
-        buf.write(line.getBytes(UTF_8))
-        buf.write('\n')
-        if (buf.size() >= chunkBytes) flushChunk()
-      }
-    }
-
-  /** Bulk load in COPY BINARY format (`COPY ... WITH (FORMAT binary)`):
-    * same sub-protocol state machine as [[copyIn]], but the stream is the
-    * documented binary file layout — [[PgBinary.copyHeader]], one
-    * length-prefixed tuple per row ([[PgBinary.writeTuple]]), the -1
-    * trailer. Each tuple's fields must already be in the COLUMN TYPE's
-    * binary send format (null = SQL NULL): raw UTF-8 for TEXT columns,
-    * [[PgBinary.vectorSend]] for a real VECTOR column. Vectors cross at
-    * 4 bytes per component instead of ~9-13 text chars, and TEXT fields
-    * skip the per-character escape scan entirely. */
+  /** Bulk load through the documented COPY sub-protocol in BINARY
+    * format (`COPY ... FROM STDIN WITH (FORMAT binary)`): answer the
+    * server's CopyInResponse ('G') by streaming the documented binary
+    * file layout — [[PgBinary.copyHeader]], one length-prefixed tuple per
+    * row ([[PgBinary.writeTuple]]), the -1 trailer — as chunked CopyData
+    * ('d') frames, finish with CopyDone ('c'), and drain to
+    * `ReadyForQuery` exactly like [[query]]. Each tuple's fields must
+    * already be in the COLUMN TYPE's binary send format (null = SQL
+    * NULL): raw UTF-8 for TEXT columns, [[PgBinary.vectorSend]] for a
+    * real VECTOR column. Vectors cross at 4 bytes per component instead
+    * of ~9-13 text chars, and no field needs an escape pass. The server
+    * reports mid-copy errors only after CopyDone; the session survives
+    * them (same drain contract as query). */
   def copyInBinary(sql: String, tuples: Iterator[Array[Array[Byte]]],
                    chunkBytes: Int = 1 << 16): PgResult =
     copyInStream(sql, chunkBytes) { (buf, flushChunk) =>
@@ -827,12 +755,12 @@ class PgWireClient(host: String, port: Int,
     } catch {
       case e: Throwable =>
         // the ITERATOR threw mid-stream (e.g. a NUL-carrying value
-        // rejected by copyField): without CopyFail the session is
+        // rejected by PgBinary.textSend): without CopyFail the session is
         // abandoned in copy-in mode and the next 'Q' is a protocol
         // violation — abort the copy, drain to ReadyForQuery (the
         // server answers 57014), and rethrow the ORIGINAL failure
         try {
-          buf.reset() // partial line: never send it
+          buf.reset() // partial tuple: never send it
           val m = ("aborted by client: " + String.valueOf(e.getMessage).take(200))
             .getBytes(UTF_8) :+ 0.toByte
           out.writeByte('f') // CopyFail

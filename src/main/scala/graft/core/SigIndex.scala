@@ -159,10 +159,16 @@ object SigIndex {
     // warns loudly, and stops beating rather than resurrecting our lease
     // over the contender's.
     @volatile var beating = true
+    // the stop signal wakes the beat only while it WAITS: interrupting the
+    // thread instead could land inside a rewrite and tear the lease file
+    // (a truncated payload, or a checksum mismatch on a checksummed local
+    // store), which release() then cannot recognise as ours and restores —
+    // an orphaned lease that blocks every mutation for a full TTL
+    val stop = new java.util.concurrent.CountDownLatch(1)
     val hb = new Thread(() => {
       val interval = math.max(50L, ttlMs / 4)
       while (beating) {
-        try Thread.sleep(interval)
+        try { if (stop.await(interval, java.util.concurrent.TimeUnit.MILLISECONDS)) beating = false }
         catch { case _: InterruptedException => beating = false }
         if (beating) try {
           val held = readLease()
@@ -216,7 +222,7 @@ object SigIndex {
     try body
     finally {
       beating = false
-      hb.interrupt()
+      stop.countDown()
       // JOIN (bounded) before release: a beat that already passed the
       // token check could otherwise land its fsys.create AFTER release()
       // removed the lease — orphaning a fresh-ts lease that blocks every

@@ -155,15 +155,6 @@ object TextFunctions {
     when(norm > 0, transform(counts, x => x / norm)).otherwise(counts)
   }
 
-  /** Character n-gram shingles (lowercased, whitespace collapsed) — input to
-    * MinHash / Jaccard dedup. */
-  def charShingles(text: Column, n: Int): Column = {
-    val norm = lower(regexp_replace(trim(text), "\\s+", " "))
-    val count = length(norm) - (n - 1)
-    when(count < 1, array().cast("array<string>"))
-      .otherwise(array_distinct(transform(sequence(lit(1), count), i => norm.substr(i, lit(n)))))
-  }
-
   /** Word n-grams WITH multiplicity (lowercased) — unlike [[wordShingles]],
     * repeats are kept: repetition analysis needs the duplicate mass.
     * One-pass compiled kernel (r20): the HOF formulation re-evaluated the

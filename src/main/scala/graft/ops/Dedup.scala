@@ -243,41 +243,13 @@ object Dedup {
     // of a diamond dependency and defeats subtree reuse.)
     if (verifyExact) {
       val sh = docs.select(col(idCol), shingleExpr(col(textCol)).as("sh"))
-      sys.env.getOrElse("SPARK_GRAFT_MINHASH_PREFILTER", "off") match {
-        case "semi" =>
-          // A/B variant (r20, guide §3.2): materialize the candidate list
-          // (output-bounded), semi-join the shingle table down to candidate
-          // ids BEFORE its exchange — only candidate rows' shingle arrays
-          // shuffle. The extra cost is one localCheckpoint of the tiny
-          // candidate table (which also cuts the r19-measured diamond that
-          // made the unmaterialized semi-join 7× slower).
-          // MEASURED r20 under the AQE-broadcast configs and re-REJECTED:
-          // sf1 1.17 → 1.54 s, sf0.1 0.84 → 1.05 s medians — the
-          // checkpoint + semi-join exchange cost more than the ~21 MB
-          // (id, shingle-array) shuffle they remove at these scales. Kept
-          // as an env-selectable shape because the trade flips when the
-          // shingle shuffle outgrows the candidate set (wide docs, high
-          // dup rate) — the default stays the measured winner.
-          val cand = Materialize(candidates)
-          val ids = cand.select(col("id_a").as(idCol))
-            .union(cand.select(col("id_b").as(idCol))).distinct()
-          val shc = sh.join(ids, Seq(idCol), "left_semi")
-          cand
-            .join(shc.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
-            .join(shc.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
-            .withColumn("jaccard",
-              round(graft.functions.HashExpressions.sortedJaccard(col("sh_a"), col("sh_b")), 6))
-            .filter(col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        case _ =>
-          candidates
-            .join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
-            .join(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
-            .withColumn("jaccard",
-              round(graft.functions.HashExpressions.sortedJaccard(col("sh_a"), col("sh_b")), 6))
-            .filter(col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-      }
+      candidates
+        .join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
+        .join(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
+        .withColumn("jaccard",
+          round(graft.functions.HashExpressions.sortedJaccard(col("sh_a"), col("sh_b")), 6))
+        .filter(col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     } else {
       // estimate mode: join the fixed-width signatures, never the shingles
       val sig = signed.select(col(idCol), col("minhash_sig"))

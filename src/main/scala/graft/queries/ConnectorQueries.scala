@@ -319,12 +319,10 @@ object ConnectorQueries {
       val (tKind, tConn) = pg match {
         case Some(run) => ("pgvector", Map(
           "host" -> "127.0.0.1", "port" -> run.port.toString,
-          "protocol" -> "wire", "database" -> "postgres", "user" -> "postgres",
-          // the gate drives the BINARY data path end to end (binary COPY
-          // write — direct, since recreate=true — and the negotiated
-          // binary extended-protocol read-back); the text path stays
-          // live-pinned by PgLiveWireSpec side by side
-          "query_protocol" -> "extended", "data_format" -> "binary"))
+          // the wire face's one data path end to end: binary COPY write
+          // (direct, since recreate=true) and the negotiated binary
+          // extended-protocol read-back
+          "protocol" -> "wire", "database" -> "postgres", "user" -> "postgres"))
         case None => ("memory", Map.empty[String, String])
       }
       try {

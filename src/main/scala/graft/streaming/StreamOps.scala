@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * The reference is batch-only ("incremental migration" is listed future
   * work, `README.md:286`); these are the engine's streaming extensions:
-  * watermarked tumbling/sliding windows and stateful gap sessionization via
+  * watermarked tumbling windows and stateful gap sessionization via
   * `flatMapGroupsWithState` — the streaming twin of
   * [[graft.ops.Sessionize]].
   *
@@ -30,15 +30,6 @@ object StreamOps {
       .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
-
-  /** Sliding-window event rate. */
-  def slidingRate(events: DataFrame, windowLen: String = "10 minutes",
-                  slide: String = "5 minutes", watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen, slide))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("n"))
 
   case class Event(event_id: Long, ts: Timestamp, user_id: Long,
                    event_type: String, value: Double)

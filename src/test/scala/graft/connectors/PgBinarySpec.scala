@@ -71,6 +71,20 @@ class PgBinarySpec extends AnyFunSuite {
     assert(PgBinary.vectorRecv(Array[Byte](0, 0, 0, 0)).isEmpty)
   }
 
+  test("vector binary format matches pgvector's vector_send golden bytes") {
+    // uint16 dim, uint16 unused = 0, then big-endian IEEE-754 float4s —
+    // fixed bytes, so a swapped byte order cannot pass as a round trip
+    val golden = Array(0x00, 0x02, 0x00, 0x00, 0x3f, 0x80, 0x00, 0x00,
+      0xc0, 0x00, 0x00, 0x00).map(_.toByte)
+    assert(PgBinary.vectorSend(Array(1.0f, -2.0f)).toSeq == golden.toSeq)
+    assert(PgBinary.vectorRecv(golden).toSeq == Seq(1.0f, -2.0f))
+    // a non-palindromic component pins the order WITHIN each float4:
+    // 0.1f = 0x3DCCCCCD
+    val tenth = Array(0x00, 0x01, 0x00, 0x00, 0x3d, 0xcc, 0xcc, 0xcd).map(_.toByte)
+    assert(PgBinary.vectorSend(Array(0.1f)).toSeq == tenth.toSeq)
+    assert(PgBinary.vectorRecv(tenth).toSeq == Seq(0.1f))
+  }
+
   test("vectorRecv rejects a length-inconsistent frame typed") {
     val e = intercept[PgWireException](
       PgBinary.vectorRecv(Array[Byte](0, 3, 0, 0, 1, 2, 3, 4))) // dim 3, 1 float

@@ -13,12 +13,16 @@ import org.apache.spark.sql.functions._
   *   VERIFIED LIVE here: `buildSelect` projections/filters/limits,
   *   `catalogPredicate` existence + case folding + search-path
   *   resolution, the `information_schema.columns` introspection query,
-  *   the vector TEXT codec round trip, and the exact failure shape of
-  *   the `VECTOR(d)` DDL on a server without the pgvector extension.
+  *   the vector TEXT codec round trip, the exact failure shape of the
+  *   `VECTOR(d)` DDL on a server without the pgvector extension, and the
+  *   wire face's one data path (binary COPY / binary Bind parameters in,
+  *   Describe-negotiated binary results out).
   *
   *   STILL env-blocked: Spark's JDBC data path (no driver jar on the
   *   offline resolver) and the `vector` type itself (extension not
-  *   installed) — those remain covered by unit/property/oracle gates. */
+  *   installed, so a real column's `vector_send`/`vector_recv` framing is
+  *   pinned only by PgBinarySpec's golden bytes) — those remain covered
+  *   by unit/property/oracle gates. */
 class PgLiveWireSpec extends SparkSpec {
   import spark.implicits._
 
@@ -162,7 +166,7 @@ class PgLiveWireSpec extends SparkSpec {
     val si = pgv.schemaInfo(spark, wireConn(), "wire_e2e")
     assert(si.schema.fieldNames.toSeq == Seq("id", "vector", "metadata"), si.schema)
     // readBack = the write codec's inverse — canonical round trip, hostile
-    // metadata values included (the '' escaping is what's under test)
+    // metadata values included (binary fields carry them verbatim)
     val back = pgv.readBack(spark, wireConn(), load)
       .orderBy(graft.model.Canonical.ID).collect()
     assert(back.map(_.getString(0)).toSeq == Seq("a", "b", "c"))
@@ -178,8 +182,9 @@ class PgLiveWireSpec extends SparkSpec {
     assert(rep2.written == 1)
     assert(pgv.readBack(spark, wireConn(), load).count() == 4)
     // ...and REPLACES existing ids (the wire face's id-keyed upsert: each
-    // batch is one atomic delete-then-insert statement) — a re-delivered
-    // batch (retried Spark task) converges instead of duplicating ids
+    // staged partition publishes as one atomic delete-then-insert) — a
+    // re-delivered batch (retried Spark task) converges instead of
+    // duplicating ids
     pgv.write(one(Seq(8f, 8f)), wireConn(), load.copy(recreate = false))
     val after = pgv.readBack(spark, wireConn(), load)
     assert(after.count() == 4, "upsert duplicated an existing id")
@@ -190,6 +195,9 @@ class PgLiveWireSpec extends SparkSpec {
   test("write_mode=insert: the multi-VALUES upsert path stays live alongside COPY") {
     live()
     val pgv = ConnectorRegistry("pgvector")
+    // write_mode=insert now binds each row's values as binary parameters
+    // instead of rendering one multi-VALUES literal; the upsert contract
+    // and the quote in the metadata must survive the change of path
     val conn = wireConn("write_mode" -> "insert")
     val load = graft.config.LoadSpec(collection = "wire_ins", recreate = true)
     def one(vec: Seq[Float]) = Seq(("x", vec, Map("k" -> "it's")))
@@ -207,8 +215,9 @@ class PgLiveWireSpec extends SparkSpec {
     live()
     val pgv = ConnectorRegistry("pgvector")
     // tab, newline, CR, backslash, and \N-lookalike — exactly the bytes
-    // COPY text format frames rows/fields with; unescaped, any of them
-    // would split or null the row
+    // COPY text format frames rows/fields with; the binary COPY the face
+    // writes length-prefixes every field, so none of them may split or
+    // null the row
     val hostile = Map(
       "tab" -> "a\tb", "nl" -> "line1\nline2", "cr" -> "x\ry",
       "bs" -> "c:\\dir\\n not a newline", "nul_lookalike" -> "\\N")
@@ -219,29 +228,32 @@ class PgLiveWireSpec extends SparkSpec {
     assert(pgv.write(df, wireConn(), load).written == 1)
     val got = pgv.readBack(spark, wireConn(), load).head()
     assert(got.getMap[String, String](2).toMap == hostile,
-      s"COPY escaping mangled a value: ${got.getMap[String, String](2).toMap}")
+      s"COPY framing mangled a value: ${got.getMap[String, String](2).toMap}")
     assert(got.getSeq[Float](1) == Seq(1f, -2f))
   }
 
   test("copyIn error shapes: bad relation fails typed; query() on COPY can't hang") {
     val c = live()
-    import graft.connectors.pgwire.PgWireClient.copyField
+    import graft.connectors.pgwire.PgBinary
     // COPY into a missing table: error arrives BEFORE copy mode — typed,
     // and the session survives (drain-to-ReadyForQuery contract)
-    val e = intercept[PgWireException](
-      c.copyIn("COPY absent_copy_t FROM STDIN", Iterator("1\t2")))
+    val e = intercept[PgWireException](c.copyInBinary(
+      "COPY absent_copy_t FROM STDIN WITH (FORMAT binary)",
+      Iterator(Array(PgBinary.textSend("1")))))
     assert(e.sqlState == "42P01", s"${e.sqlState}: ${e.getMessage}")
     assert(c.query("SELECT 1 + 1").rows.head.head == "2")
     // a COPY FROM STDIN issued through plain query(): the client answers
     // CopyFail instead of leaving the server waiting forever; the
-    // statement fails typed (57014 query_canceled) and the session lives
+    // statement fails typed (57014 query_canceled), names the method to
+    // use, and the session lives
     c.query("CREATE TABLE copy_guard_t (a TEXT)")
     val e2 = intercept[PgWireException](c.query("COPY copy_guard_t FROM STDIN"))
-    assert(e2.getMessage.contains("copyIn"), s"${e2.sqlState}: ${e2.getMessage}")
+    assert(e2.getMessage.contains("copyInBinary"), s"${e2.sqlState}: ${e2.getMessage}")
     assert(c.query("SELECT 2 + 2").rows.head.head == "4")
     // happy path straight through the client: rows land, tag is COPY n
-    val r = c.copyIn("COPY copy_guard_t (a) FROM STDIN",
-      Iterator(copyField("v1"), copyField(null), copyField("a\tb")))
+    val r = c.copyInBinary("COPY copy_guard_t (a) FROM STDIN WITH (FORMAT binary)",
+      Iterator(Array(PgBinary.textSend("v1")), Array[Array[Byte]](null),
+        Array(PgBinary.textSend("a\tb"))))
     assert(r.tags.lastOption.exists(_.startsWith("COPY")), r.tags)
     assert(r.rowCount == 3, r.tags)
     val back = c.query("SELECT a FROM copy_guard_t ORDER BY a NULLS LAST")
@@ -251,63 +263,83 @@ class PgLiveWireSpec extends SparkSpec {
 
   test("extended query protocol: params carry hostile values with no escaping surface") {
     val c = live()
+    import graft.connectors.pgwire.PgBinary
     c.query("CREATE TABLE ext_t (a TEXT, b TEXT)")
+    c.prepare("ext_ins", "INSERT INTO ext_t VALUES ($1, $2)")
+    c.prepare("ext_sel", "SELECT b FROM ext_t WHERE a = $1")
+    def param(v: String) = Option(v).map(PgBinary.textSend)
+    def sel(k: String) = c.execPreparedRaw("ext_sel", Seq(param(k)), Seq(1), Seq(1))
+    def cell(b: Array[Byte]) = if (b == null) null else PgBinary.textRecv(b)
     // every classic injection/framing shape travels as a Bind PARAMETER —
     // the SQL text never contains it, so nothing needs quoting
     val hostile = Seq(
       "it's'; DROP TABLE ext_t; --", "back\\slash", "line1\nline2",
       "tab\there", "$1 $2 lookalike", "\\N", "héllo — ünïcode", "")
     hostile.zipWithIndex.foreach { case (v, i) =>
-      val r = c.execParams("INSERT INTO ext_t VALUES ($1, $2)",
-        Seq(Some(s"k$i"), Some(v)))
-      assert(r.rowCount == 1, r.tags)
+      val r = c.execPreparedRaw("ext_ins", Seq(param(s"k$i"), param(v)), Seq(1), Nil)
+      assert(r.tags == Seq("INSERT 0 1"), r.tags)
     }
-    c.execParams("INSERT INTO ext_t VALUES ($1, $2)", Seq(Some("knull"), None))
-    val back = c.execParams("SELECT b FROM ext_t WHERE a = $1", Seq(Some("k0")))
-    assert(back.columns == Seq("b") && back.rows.head.head == hostile.head, back.rows)
+    c.execPreparedRaw("ext_ins", Seq(param("knull"), None), Seq(1), Nil)
+    val back = sel("k0")
+    assert(back.columns == Seq("b") && cell(back.rows.head.head) == hostile.head,
+      back.rows.map(_.map(cell)))
     hostile.zipWithIndex.foreach { case (v, i) =>
-      assert(c.execParams("SELECT b FROM ext_t WHERE a = $1", Seq(Some(s"k$i")))
-        .rows.head.head == v, s"param round-trip mangled: $v")
+      assert(cell(sel(s"k$i").rows.head.head) == v, s"param round-trip mangled: $v")
     }
-    assert(c.execParams("SELECT b FROM ext_t WHERE a = $1", Seq(Some("knull")))
-      .rows.head.head == null)
+    assert(sel("knull").rows.head.head == null)
     // the table survived every "injection" — the values were data
     // (8 hostile rows + the NULL-param row)
     assert(c.query("SELECT count(*) FROM ext_t").rows.head.head == "9")
     // error shape: bad SQL through Parse fails typed, session survives
-    val e = intercept[PgWireException](c.execParams("SELEKT 1"))
+    val e = intercept[PgWireException](c.prepare("ext_bad", "SELEKT 1"))
     assert(e.sqlState == "42601", s"${e.sqlState}: ${e.getMessage}")
     assert(c.query("SELECT 3 + 3").rows.head.head == "6")
   }
 
   test("fuzz: generated strings round-trip both value paths (Bind params, COPY framing)") {
     val c = live()
-    import graft.connectors.pgwire.PgWireClient.copyField
+    import graft.connectors.pgwire.PgBinary
     // seeded so a failure reproduces; palette is the full hazard set —
     // quotes, backslashes, COPY framing chars, \N lookalikes, unicode,
-    // placeholder lookalikes (NUL excluded: rejected by contract)
+    // placeholder lookalikes (NUL excluded: rejected by contract). Binary
+    // framing length-prefixes every value, so no escaping pass exists.
     val rnd = new scala.util.Random(181818L)
     val palette = "ab'\"\\\t\n\r$12;—é中,{}%_N".toCharArray
     val values = (0 until 120).map { i =>
       if (i == 0) "" else
         (0 until (1 + rnd.nextInt(24))).map(_ => palette(rnd.nextInt(palette.length))).mkString
     }
-    c.query("CREATE TABLE fuzz_params (k INT, v TEXT); " +
-      "CREATE TABLE fuzz_copy (k INT, v TEXT)")
+    // each value sits between two NULL neighbours, so a length prefix
+    // that swallowed or leaked a byte would shift the row out of shape
+    c.query("CREATE TABLE fuzz_copy (k INT, pre TEXT, v TEXT, post TEXT); " +
+      "CREATE TABLE fuzz_params (k INT, pre TEXT, v TEXT, post TEXT)")
+    val r = c.copyInBinary(
+      "COPY fuzz_copy (k, pre, v, post) FROM STDIN WITH (FORMAT binary)",
+      values.zipWithIndex.iterator.map { case (v, i) =>
+        Array(PgBinary.int4Send(i), null, PgBinary.textSend(v), null)
+      })
+    assert(r.rowCount == values.length, r.tags)
+    // one Bind/Execute/Sync round trip per row (the unpipelined path)
+    c.prepare("fuzz_ins", "INSERT INTO fuzz_params VALUES ($1, $2, $3, $4)")
     values.zipWithIndex.foreach { case (v, i) =>
-      c.execParams("INSERT INTO fuzz_params VALUES ($1, $2)",
-        Seq(Some(i.toString), Some(v)))
+      val ins = c.execPreparedRaw("fuzz_ins",
+        Seq(Some(PgBinary.int4Send(i)), None, Some(PgBinary.textSend(v)), None),
+        Seq(1, 1, 1, 1), Nil)
+      assert(ins.tags == Seq("INSERT 0 1"), ins.tags)
     }
-    c.copyIn("COPY fuzz_copy FROM STDIN",
-      values.zipWithIndex.iterator.map { case (v, i) => s"$i\t${copyField(v)}" })
-    for (table <- Seq("fuzz_params", "fuzz_copy")) {
-      val got = c.query(s"SELECT k, v FROM $table ORDER BY k").rows
-        .map(r => r(0).toInt -> r(1)).toMap
-      values.zipWithIndex.foreach { case (v, i) =>
-        // COPY maps the empty-string field '' to '' (only \N is NULL);
-        // both paths must return the value byte-identical
-        assert(got(i) == v,
-          s"$table mangled value $i: ${got(i).toSeq} != ${v.toSeq}")
+    // read back through binary result columns, not the text protocol
+    for (table <- Seq("fuzz_copy", "fuzz_params")) {
+      c.prepare(s"${table}_sel", s"SELECT k, pre, v, post FROM $table ORDER BY k")
+      val rows = c.execPreparedRaw(s"${table}_sel", Nil, Nil, Seq(1, 1, 1, 1)).rows
+      assert(rows.length == values.length, s"$table: ${rows.length} rows")
+      rows.foreach { row =>
+        val i = PgBinary.int4Recv(row(0))
+        assert(row(1) == null && row(3) == null, s"$table row $i: NULL neighbour lost")
+        // the empty string stays '' (only a -1 length is NULL); both
+        // paths must return the value byte-identical
+        val got = PgBinary.textRecv(row(2))
+        assert(got == values(i),
+          s"$table mangled value $i: ${got.toSeq} != ${values(i).toSeq}")
       }
     }
   }
@@ -316,9 +348,10 @@ class PgLiveWireSpec extends SparkSpec {
     "fuzz population byte-identically with the text paths") {
     val c = live()
     import graft.connectors.pgwire.PgBinary
-    // SAME seed and palette as the text fuzz test: the binary paths must
-    // land the identical 120-value population — framing chars included,
-    // with NO escaping pass at all (binary length-prefixes everything)
+    // SAME seed and palette as the fuzz test above: the pipelined binary
+    // paths must land the identical 120-value population — framing chars
+    // included, with NO escaping pass at all (binary length-prefixes
+    // everything) — and the text-protocol read must return it verbatim
     val rnd = new scala.util.Random(181818L)
     val palette = "ab'\"\\\t\n\r$12;—é中,{}%_N".toCharArray
     val values = (0 until 120).map { i =>
@@ -386,7 +419,11 @@ class PgLiveWireSpec extends SparkSpec {
     "and the negotiated binary read match the text path end to end") {
     live()
     val pgv = ConnectorRegistry("pgvector")
+    // the keys of the one remaining path are accepted as no-ops, so
+    // configs written when binary was opt-in run unchanged
     val conn = wireConn("query_protocol" -> "extended", "data_format" -> "binary")
+    // quotes plus exactly the bytes COPY text format frames rows/fields
+    // with — binary length-prefixed fields must carry them verbatim
     val hostile = Map(
       "tab" -> "a\tb", "nl" -> "line1\nline2", "cr" -> "x\ry",
       "bs" -> "c:\\dir\\n not a newline", "nul_lookalike" -> "\\N",
@@ -416,7 +453,7 @@ class PgLiveWireSpec extends SparkSpec {
     assert(after.count() == 3, "staged binary upsert duplicated an id")
     assert(after.filter(col(graft.model.Canonical.ID) === "b")
       .head().getSeq[Float](1) == Seq(9f, 9f))
-    // and the binary extended-protocol upsert (write_mode=insert) too
+    // and the extended-protocol upsert (write_mode=insert) too
     val connIns = wireConn("query_protocol" -> "extended",
       "data_format" -> "binary", "write_mode" -> "insert")
     assert(pgv.write(one(Seq(11f, 12f)), connIns, load.copy(recreate = false)).written == 1)
@@ -475,21 +512,24 @@ class PgLiveWireSpec extends SparkSpec {
 
   test("extended-protocol pipelined batch is atomic: one bad row rolls back the batch") {
     val c = live()
+    import graft.connectors.pgwire.PgBinary
     c.query("CREATE TABLE ext_atomic (id TEXT, n INT CHECK (n < 100))")
     c.prepare("ins_a", "INSERT INTO ext_atomic VALUES ($1, $2)")
+    def row(id: String, n: Int): Unit = c.bindExecRaw("ins_a",
+      Seq(Some(PgBinary.textSend(id)), Some(PgBinary.int4Send(n))), Seq(1, 1))
     // batch of 3 with the MIDDLE row violating the check: everything
     // between Syncs is one implicit transaction — the server skips the
     // rest after the error and rolls back, so NONE of the 3 land
-    c.bindExec("ins_a", Seq(Some("a"), Some("1")))
-    c.bindExec("ins_a", Seq(Some("b"), Some("999")))
-    c.bindExec("ins_a", Seq(Some("c"), Some("2")))
+    row("a", 1)
+    row("b", 999)
+    row("c", 2)
     val e = intercept[PgWireException](c.syncBatch())
     assert(e.sqlState == "23514", s"${e.sqlState}: ${e.getMessage}") // check_violation
     assert(c.query("SELECT count(*) FROM ext_atomic").rows.head.head == "0",
       "a failed pipeline batch left partial rows — batch is not atomic")
     // a clean batch through the same prepared statement lands whole
-    c.bindExec("ins_a", Seq(Some("a"), Some("1")))
-    c.bindExec("ins_a", Seq(Some("c"), Some("2")))
+    row("a", 1)
+    row("c", 2)
     c.syncBatch()
     assert(c.query("SELECT count(*) FROM ext_atomic").rows.head.head == "2")
   }
@@ -505,7 +545,7 @@ class PgLiveWireSpec extends SparkSpec {
     val df = (0 until 8000).map(i => (s"id$i", Seq(i.toFloat, 1f), Map("k" -> i.toString)))
       .toDF(graft.model.Canonical.ID, graft.model.Canonical.VECTOR,
         graft.model.Canonical.METADATA)
-    val conn = wireConn("write_mode" -> "insert", "query_protocol" -> "extended")
+    val conn = wireConn("write_mode" -> "insert")
     val load = graft.config.LoadSpec(collection = "wire_bigbatch",
       recreate = true, batchSize = 8000)
     @volatile var written = -1L
@@ -525,37 +565,23 @@ class PgLiveWireSpec extends SparkSpec {
 
   test("extended batch atomicity holds ACROSS chunked Syncs (explicit transaction)") {
     val c = live()
+    import graft.connectors.pgwire.PgBinary
     c.query("CREATE TABLE ext_chunk (id TEXT, n INT CHECK (n < 100))")
     c.prepare("ins_c", "INSERT INTO ext_chunk VALUES ($1, $2)")
+    def row(id: String, n: Int): Unit = c.bindExecRaw("ins_c",
+      Seq(Some(PgBinary.textSend(id)), Some(PgBinary.int4Send(n))), Seq(1, 1))
     // the face's deadlock fix splits one batch into several Sync windows
     // inside BEGIN...COMMIT; a failure in a LATER window must roll back
     // rows already synced in EARLIER windows of the same batch
     c.query("BEGIN")
-    c.bindExec("ins_c", Seq(Some("a"), Some("1")))
+    row("a", 1)
     c.syncBatch() // window 1: fine (Sync inside BEGIN does not commit)
-    c.bindExec("ins_c", Seq(Some("b"), Some("999")))
+    row("b", 999)
     val e = intercept[PgWireException](c.syncBatch()) // window 2: violates
     assert(e.sqlState == "23514", s"${e.sqlState}: ${e.getMessage}")
     c.query("ROLLBACK")
     assert(c.query("SELECT count(*) FROM ext_chunk").rows.head.head == "0",
       "an earlier Sync window's rows survived the batch rollback")
-  }
-
-  test("copyIn: an iterator failure mid-stream aborts via CopyFail, session survives") {
-    val c = live()
-    c.query("CREATE TABLE copy_abort (a TEXT)")
-    val boom = new RuntimeException("value rejected mid-stream")
-    val e = intercept[RuntimeException](
-      c.copyIn("COPY copy_abort FROM STDIN", new Iterator[String] {
-        private var i = 0
-        def hasNext = true
-        def next(): String = { i += 1; if (i > 3) throw boom; s"v$i" }
-      }))
-    assert(e eq boom, s"original failure was swallowed: $e")
-    // CopyFail aborted the statement: no rows landed, and the SAME
-    // session answers the next statement (not stuck in copy-in mode)
-    assert(c.query("SELECT count(*) FROM copy_abort").rows.head.head == "0")
-    assert(c.query("SELECT 5 + 5").rows.head.head == "10")
   }
 
   test("COPY mode rejects a collection named like the staging table (pg_temp shadowing)") {
@@ -572,6 +598,8 @@ class PgLiveWireSpec extends SparkSpec {
   test("query_protocol=extended: connector write (insert mode) + partitioned read e2e") {
     live()
     val pgv = ConnectorRegistry("pgvector")
+    // query_protocol=extended is the one remaining protocol, accepted as
+    // a no-op so configs that opted into it run unchanged
     val conn = wireConn("write_mode" -> "insert", "query_protocol" -> "extended")
     val load = graft.config.LoadSpec(collection = "wire_ext", recreate = true)
     val df = Seq(
@@ -587,7 +615,7 @@ class PgLiveWireSpec extends SparkSpec {
     assert(back(0).getMap[String, String](2).toMap ==
       Map("k" -> "v'--; DROP TABLE x", "u" -> "héllo"))
     assert(back(0).getSeq[Float](1) == Seq(1.5f, -2.25f))
-    // the upsert contract holds on the parameterized path too
+    // the upsert contract holds on the insert path too
     def one(vec: Seq[Float]) = Seq(("a", vec, Map("k" -> "9")))
       .toDF(graft.model.Canonical.ID, graft.model.Canonical.VECTOR,
         graft.model.Canonical.METADATA)
@@ -602,6 +630,26 @@ class PgLiveWireSpec extends SparkSpec {
       QuerySpec(collection = "wire_ext"))
     assert(sliced.rdd.getNumPartitions == 4) // 3 numeric + text catch-all
     assert(sliced.count() == 3)
+  }
+
+  test("removed wire options: data_format=text and query_protocol=simple fail naming the option") {
+    live()
+    val pgv = ConnectorRegistry("pgvector")
+    val df = Seq(("a", Seq(1f, 2f), Map.empty[String, String]))
+      .toDF(graft.model.Canonical.ID, graft.model.Canonical.VECTOR,
+        graft.model.Canonical.METADATA)
+    for ((k, v) <- Seq("data_format" -> "text", "query_protocol" -> "simple")) {
+      val conn = wireConn(k -> v)
+      val ew = intercept[IllegalArgumentException](pgv.write(df, conn,
+        graft.config.LoadSpec(collection = "wire_removed_opt", recreate = true)))
+      assert(ew.getMessage.contains(s"$k=$v") &&
+        ew.getMessage.contains(s"the $k option was removed"), ew.getMessage)
+      val er = intercept[IllegalArgumentException](
+        pgv.read(spark, conn, QuerySpec(collection = "wire_removed_opt")))
+      assert(er.getMessage.contains(s"$k=$v"), er.getMessage)
+    }
+    // rejected before any SQL ran: the write never created its table
+    assert(!pgv.exists(spark, wireConn(), "wire_removed_opt"))
   }
 
   test("partitioned wire read: declared id bounds split into range slices") {
