@@ -1,12 +1,24 @@
 package graft.connectors
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.StructType
 import graft.config.{LoadSpec, QuerySpec}
 
 /** Per-sink write accounting, mirroring the reference's Milvus result dict
   * (`adapters/milvus.py:284-291`: insert_count / processed / failed). */
 case class WriteReport(written: Long, skipped: Long = 0L, details: Map[String, String] = Map.empty)
+
+/** A sink's row count taken on its write action (`Dataset.observe`): write
+  * [[observed]], then read [[rows]]. A separate `count()` would evaluate
+  * the whole upstream plan a second time, and a read-back of an append
+  * target would also count the rows already there. */
+final class ObservedRowCount(df: DataFrame, sink: String) {
+  private val obs = new Observation(s"graft-$sink-write-${System.nanoTime()}")
+  val observed: DataFrame = df.observe(obs, count(lit(1)).as("rows"))
+  /** Blocks until the write action over [[observed]] has completed. */
+  def rows: Long = obs.get.get("rows").map(String.valueOf(_).toLong).getOrElse(0L)
+}
 
 /** Introspected collection metadata — `get_schema_info` parity
   * (`adapters/pgvector.py:244-289`, `adapters/qdrant.py:257-322`,
@@ -67,6 +79,14 @@ trait VectorConnector {
     * semantics, one implicit transaction per batch) while its JDBC face
     * appends. Defaults to the static answer. */
   def upsertsById(connection: Map[String, String]): Boolean = upsertsById
+
+  /** Whether [[write]] reads `load.dimension` (collection DDL, index
+    * creation). When true and the config leaves the dimension open, the
+    * migrator resolves it with a bounded probe before the write; sinks
+    * whose storage is dimension-free (files, the in-memory store) return
+    * false and the probe is skipped. Defaults to true, so a registered
+    * custom connector keeps receiving a resolved dimension. */
+  def takesDimension: Boolean = true
 
   /** Definitive existence probe: `false` ONLY on positive evidence of
     * absence (missing path / no catalog row / describe miss); every other

@@ -13,6 +13,7 @@ import graft.model.Canonical
   */
 class FileConnector(fmt: String) extends VectorConnector {
   override def name: String = fmt
+  override def takesDimension: Boolean = false
 
   private def path(connection: Map[String, String], collection: String): String = {
     val root = connection.getOrElse("path",
@@ -78,12 +79,12 @@ class FileConnector(fmt: String) extends VectorConnector {
         PgVectorCodec.vectorToText(col(Canonical.VECTOR)).as(Canonical.VECTOR),
         to_json(col(Canonical.METADATA)).as(Canonical.METADATA))
     else df
-    val n = out.count()
-    out.write.format(fmt)
+    val counter = new ObservedRowCount(out, fmt)
+    counter.observed.write.format(fmt)
       .option("header", "true")
       .mode(if (load.recreate) SaveMode.Overwrite else SaveMode.Append)
       .save(path(connection, load.collection))
-    WriteReport(written = n)
+    WriteReport(written = counter.rows)
   }
 
   override def exists(spark: SparkSession, connection: Map[String, String],

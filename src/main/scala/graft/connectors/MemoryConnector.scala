@@ -23,6 +23,7 @@ object MemoryStore {
 
 class MemoryConnector extends VectorConnector {
   override def name: String = "memory"
+  override def takesDimension: Boolean = false
 
   override def read(spark: SparkSession, connection: Map[String, String],
                     query: QuerySpec): DataFrame = {

@@ -18,6 +18,7 @@ import graft.model.Canonical
   */
 class ParquetConnector extends VectorConnector {
   override def name: String = "parquet"
+  override def takesDimension: Boolean = false
 
   private def path(connection: Map[String, String], collection: String): String = {
     val root = connection.getOrElse("path",
@@ -45,12 +46,9 @@ class ParquetConnector extends VectorConnector {
   override def write(df: DataFrame, connection: Map[String, String],
                      load: LoadSpec): WriteReport = {
     val mode = if (load.recreate) SaveMode.Overwrite else SaveMode.Append
-    df.write.mode(mode).parquet(path(connection, load.collection))
-    // row count from the written footers — metadata-only, no second scan
-    // of the source plan
-    val n = df.sparkSession.read.parquet(path(connection, load.collection)).count()
-    WriteReport(written = n, details = Map("note" ->
-      (if (mode == SaveMode.Append) "count includes pre-existing rows (append mode)" else "")))
+    val counter = new ObservedRowCount(df, "parquet")
+    counter.observed.write.mode(mode).parquet(path(connection, load.collection))
+    WriteReport(written = counter.rows)
   }
 
   override def exists(spark: SparkSession, connection: Map[String, String],

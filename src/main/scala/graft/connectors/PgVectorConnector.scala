@@ -180,12 +180,8 @@ class PgVectorConnector extends VectorConnector {
       col(Canonical.ID).as(load.idColumn),
       PgVectorCodec.vectorToText(col(Canonical.VECTOR)).as(load.vectorColumn),
       to_json(col(Canonical.METADATA)).as("metadata"))
-    // Row count rides along with the write itself (Dataset.observe) — a
-    // count() here would be a SECOND full pass over the source, which at
-    // 100 TB doubles the read cost just for the report number.
-    val obs = new org.apache.spark.sql.Observation(s"graft-pgv-write-${System.nanoTime()}")
-    val observed = out.observe(obs, count(lit(1)).as("rows"))
-    observed.write.format("jdbc")
+    val counter = new ObservedRowCount(out, "pgv")
+    counter.observed.write.format("jdbc")
       .option("url", jdbcUrl(connection))
       .option("dbtable", load.collection)
       .option("user", connection.getOrElse("user", "postgres"))
@@ -195,7 +191,7 @@ class PgVectorConnector extends VectorConnector {
       .option("batchsize", load.batchSize.toString)
       .mode(if (load.recreate) SaveMode.Overwrite else SaveMode.Append)
       .save()
-    WriteReport(written = obs.get.get("rows").map(String.valueOf(_).toLong).getOrElse(0L))
+    WriteReport(written = counter.rows)
   }
 
   /** information_schema match for a table reference: Postgres stores

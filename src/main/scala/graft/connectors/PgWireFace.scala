@@ -313,8 +313,7 @@ object PgWireFace {
           org.apache.spark.sql.types.FloatType))
       else PgVectorCodec.vectorToText(col(Canonical.VECTOR)),
       to_json(col(Canonical.METADATA)))
-    val obs = new org.apache.spark.sql.Observation(s"graft-pgwire-${System.nanoTime()}")
-    val observed = out.observe(obs, count(lit(1)).as("rows"))
+    val counter = new ObservedRowCount(out, "pgwire")
     val ep = endpoint(connection)
     val batch = math.max(1, load.batchSize)
     // NOTE ids are assumed unique within the written frame (the canonical
@@ -332,7 +331,7 @@ object PgWireFace {
     // implicit transaction: a task failing mid-copy (or aborting with
     // CopyFail) lands ZERO rows, so the re-run is the first landing.
     val direct = useCopy && load.recreate
-    observed.foreachPartition { (it: Iterator[Row]) =>
+    counter.observed.foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext) {
         val c = ep.connect()
         import graft.connectors.pgwire.PgBinary
@@ -420,7 +419,6 @@ object PgWireFace {
         } finally c.close()
       }
     }
-    WriteReport(written =
-      obs.get.get("rows").map(String.valueOf(_).toLong).getOrElse(0L))
+    WriteReport(written = counter.rows)
   }
 }

@@ -38,6 +38,7 @@ import graft.ops.WebDataset
   * `num_shards` (default 16). */
 class WebDatasetConnector extends VectorConnector {
   override def name: String = "webdataset"
+  override def takesDimension: Boolean = false
 
   private def dir(connection: Map[String, String], collection: String): String = {
     val root = connection.getOrElse("path",

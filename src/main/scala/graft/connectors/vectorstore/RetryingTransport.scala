@@ -71,6 +71,9 @@ case class RetryingTransport(
   override def scrollPageFiltered(name: String, cursor: Option[String], pageSize: Int,
                                   filter: Option[String]): (Seq[VSRecord], Option[String]) =
     withRetry(inner.scrollPageFiltered(name, cursor, pageSize, filter))
+  override def scrollIdsPageFiltered(name: String, cursor: Option[String], pageSize: Int,
+                                     filter: Option[String]): (Seq[String], Option[String]) =
+    withRetry(inner.scrollIdsPageFiltered(name, cursor, pageSize, filter))
   override def serverSideFilters: Boolean = inner.serverSideFilters
   override def supportsNativeSearch(metric: String): Boolean =
     inner.supportsNativeSearch(metric)

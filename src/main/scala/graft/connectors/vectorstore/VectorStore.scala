@@ -80,6 +80,17 @@ trait VectorStoreTransport extends Serializable {
                          filter: Option[String]): (Seq[VSRecord], Option[String]) =
     scrollPage(name, cursor, pageSize)
 
+  /** Ids-only [[scrollPageFiltered]]: the same page and cursor, without
+    * vectors or payload — for callers that only look at the ids (scan
+    * planning's slice probe). The default derives the ids from the full
+    * page; wire transports override with their backend's ids-only
+    * request. */
+  def scrollIdsPageFiltered(name: String, cursor: Option[String], pageSize: Int,
+                            filter: Option[String]): (Seq[String], Option[String]) = {
+    val (recs, next) = scrollPageFiltered(name, cursor, pageSize, filter)
+    (recs.map(_.id), next)
+  }
+
   /** Integer-offset compat shim over the native cursor walk, shared by
     * cursor-paged transports (their wire cannot address offsets): walks
     * [[scrollPage]], drops `fromIdx` records, returns up to `pageSize`.

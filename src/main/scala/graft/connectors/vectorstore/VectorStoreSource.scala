@@ -699,8 +699,13 @@ private[vectorstore] object VSPaging {
         store.scrollFiltered(collection, c, math.min(pageSize, end - c), wireFilter)
       }
     case VSCursorPartition(skip, takeN) => new Iterator[Seq[VSRecord]] {
+      // a pushed limit caps the page: the first page then holds every
+      // record the partition returns (isEmpty's limit 1 reads one record)
+      private val capped =
+        if (takeN < 0) pageSize
+        else math.max(1L, math.min(pageSize.toLong, skip.toLong + takeN)).toInt
       private val walk =
-        cursorWalk(c => store.scrollPageFiltered(collection, c, pageSize, wireFilter))
+        cursorWalk(c => store.scrollPageFiltered(collection, c, capped, wireFilter))
       private var toSkip = skip
       private var remaining = takeN
       override def hasNext: Boolean = walk.hasNext && remaining != 0
@@ -882,13 +887,14 @@ class VSScan(collection: String, dialect: FilterDialect, pushed: Array[Filter],
     // filtered count where the wire offers one, else the total as an
     // overestimate — extra budget is harmless, a too-small one silently
     // forfeits the parallel slicing for exactly the biggest scans).
-    var (probe, next) = store.scrollPageFiltered(collection, None, pageSize, wireFilter)
+    // Ids only: vectors and payload of the probe page are never used.
+    var (probe, next) = store.scrollIdsPageFiltered(collection, None, pageSize, wireFilter)
     if (probe.isEmpty && next.isDefined) {
       val est = math.max(2L, filteredPopulation)
       val maxHops = 8 + 2 * (64 - java.lang.Long.numberOfLeadingZeros(est))
       var hops = 0
       while (probe.isEmpty && next.isDefined && hops < maxHops) {
-        val (p2, n2) = store.scrollPageFiltered(collection, next, pageSize, wireFilter)
+        val (p2, n2) = store.scrollIdsPageFiltered(collection, next, pageSize, wireFilter)
         probe = p2; next = n2; hops += 1
       }
       if (probe.isEmpty && next.isDefined)
@@ -896,7 +902,7 @@ class VSScan(collection: String, dialect: FilterDialect, pushed: Array[Filter],
           s"after $maxHops empty pages — falling back to ONE sequential walk")
     }
     if (probe.isEmpty || next.isEmpty) return single // fits in one page / empty
-    val numeric = probe.flatMap(r => Option(r.id)).flatMap(_.toDoubleOption)
+    val numeric = probe.flatMap(Option(_)).flatMap(_.toDoubleOption)
     if (numeric.isEmpty || cursorParallelism < 2) return single
     val lo = numeric.min
     // hi extension under a SELECTIVE pushed filter must size from the

@@ -271,20 +271,33 @@ class QdrantWireTransport(baseUrl: String, apiKey: Option[String] = None,
 
   override def scrollPageFiltered(name: String, cursor: Option[String], pageSize: Int,
                                   filter: Option[String]): (Seq[VSRecord], Option[String]) = {
+    val (pts, next) = scrollPoints(name, cursor, pageSize, filter, withData = true)
+    ((0 until pts.size()).map(i => pointToRecord(pts.get(i))), next)
+  }
+
+  /** Same scroll with `with_payload`/`with_vector` off: real Qdrant then
+    * returns bare point ids. */
+  override def scrollIdsPageFiltered(name: String, cursor: Option[String], pageSize: Int,
+                                     filter: Option[String]): (Seq[String], Option[String]) = {
+    val (pts, next) = scrollPoints(name, cursor, pageSize, filter, withData = false)
+    ((0 until pts.size()).map(i => WireShape("qdrant", "point", pts.get(i)).text("id")), next)
+  }
+
+  private def scrollPoints(name: String, cursor: Option[String], pageSize: Int,
+                           filter: Option[String],
+                           withData: Boolean): (ArrayNode, Option[String]) = {
     val b = obj()
     // numeric point ids ride as JSON numbers, but ONLY when the text
     // round-trips through Long exactly ('007' and >19-digit ids stay
     // strings — a lossy coercion would address the wrong point)
     cursor.foreach(c => putId(b, "offset", c))
     b.put("limit", pageSize)
-    b.put("with_payload", true)
-    b.put("with_vector", true)
+    b.put("with_payload", withData)
+    b.put("with_vector", withData)
     filter.foreach(f => b.set[ObjectNode]("filter", mapper.readTree(f)))
     val sh = WireShape("qdrant", "scroll",
       call("POST", s"/collections/${enc(name)}/points/scroll", Some(b)))
-    val pts = sh.down("result").arr("points")
-    val next = sh.opt("result", "next_page_offset").map(_.asText())
-    ((0 until pts.size()).map(i => pointToRecord(pts.get(i))), next)
+    (sh.down("result").arr("points"), sh.opt("result", "next_page_offset").map(_.asText()))
   }
 
   /** Native `POST /points/search`: cosine top-k with ties on id, filter
@@ -1216,19 +1229,25 @@ class PineconeWireTransport(baseUrl: String, apiKey: Option[String] = None,
     * within practical limits. */
   private val listCap = 100
 
-  override def scrollPage(name: String, cursor: Option[String],
-                          pageSize: Int): (Seq[VSRecord], Option[String]) = {
-    val (ix, ns) = resolved(name)
-    // two documented calls: list ids (cursor-paged), then fetch full
-    // vectors for the page
+  /** One `/vectors/list` page: ids only (cursor-paged). */
+  private def listIds(ix: String, ns: String, cursor: Option[String],
+                      pageSize: Int): (Seq[String], Option[String]) = {
     val tok = cursor.map(c => s"&paginationToken=${enc(c)}").getOrElse("")
     val sh = WireShape("pinecone", "list",
       call("GET", s"/vectors/list?index=${enc(ix)}&namespace=${enc(ns)}" +
         s"&limit=${math.min(pageSize, listCap)}$tok"))
     val idNodes = sh.arr("vectors")
-    val ids = (0 until idNodes.size()).map(i =>
-      sh.at(idNodes.get(i), s"vectors[$i]").text("id"))
-    val next = sh.opt("pagination", "next").map(_.asText())
+    ((0 until idNodes.size()).map(i =>
+      sh.at(idNodes.get(i), s"vectors[$i]").text("id")),
+      sh.opt("pagination", "next").map(_.asText()))
+  }
+
+  override def scrollPage(name: String, cursor: Option[String],
+                          pageSize: Int): (Seq[VSRecord], Option[String]) = {
+    val (ix, ns) = resolved(name)
+    // two documented calls: list ids (cursor-paged), then fetch full
+    // vectors for the page
+    val (ids, next) = listIds(ix, ns, cursor, pageSize)
     if (ids.isEmpty) return (Seq.empty, next)
     val byId = ids.grouped(listCap).flatMap { batch =>
       val fsh = WireShape("pinecone", "fetch",
@@ -1359,6 +1378,17 @@ class PineconeWireTransport(baseUrl: String, apiKey: Option[String] = None,
                   "run the backfill-gid CLI verb on this namespace (or scan unfiltered)")
             (recs, None)
         }
+    }
+
+  /** Unfiltered: the `/vectors/list` page alone, no `/vectors/fetch`.
+    * A filtered walk needs `/query`, so it keeps the trait's derivation. */
+  override def scrollIdsPageFiltered(name: String, cursor: Option[String], pageSize: Int,
+                                     filter: Option[String]): (Seq[String], Option[String]) =
+    filter match {
+      case None =>
+        val (ix, ns) = resolved(name)
+        listIds(ix, ns, cursor, pageSize)
+      case Some(_) => super.scrollIdsPageFiltered(name, cursor, pageSize, filter)
     }
 
   private case class ScanState(ranges: List[(Option[Double], Option[Double])],

@@ -237,7 +237,10 @@ class QdrantWireServer(inner: VectorStoreTransport, port: Int = 0,
     o
   }
 
-  private def recordToPoint(r: VSRecord): ObjectNode = {
+  /** `with_vector`/`with_payload` = false leave the field out of each
+    * returned point, as real Qdrant does; absent flags keep both. */
+  private def recordToPoint(r: VSRecord, withVector: Boolean = true,
+                            withPayload: Boolean = true): ObjectNode = {
     val p = obj()
     // real Qdrant returns uint point ids as JSON NUMBERS — mirror the
     // client's round-trip rule so response bodies are wire-faithful too
@@ -245,12 +248,17 @@ class QdrantWireServer(inner: VectorStoreTransport, port: Int = 0,
       case Some(l) => p.put("id", l)
       case None => p.put("id", r.id)
     }
-    if (r.vector != null) putFloats(p, "vector", r.vector)
-    val payload = p.putObject("payload")
-    r.metadata.foreach { case (k, v) => if (v == null) payload.putNull(k) else payload.put(k, v) }
-    if (r.binary != null) payload.put("__binary_b64", b64(r.binary))
+    if (withVector && r.vector != null) putFloats(p, "vector", r.vector)
+    if (withPayload) {
+      val payload = p.putObject("payload")
+      r.metadata.foreach { case (k, v) => if (v == null) payload.putNull(k) else payload.put(k, v) }
+      if (r.binary != null) payload.put("__binary_b64", b64(r.binary))
+    }
     p
   }
+
+  private def flag(body: JsonNode, field: String): Boolean =
+    Option(body.get(field)).filterNot(_.isNull).forall(_.asBoolean())
 
   private def pointToRecord(p: JsonNode): VSRecord = {
     val payload = metadataFrom(p.get("payload"))
@@ -387,7 +395,8 @@ class QdrantWireServer(inner: VectorStoreTransport, port: Int = 0,
         val recs = all.slice(from, from + limit)
         val r = obj()
         val a = r.putArray("points")
-        recs.foreach(rec => a.add(recordToPoint(rec)))
+        val (withVector, withPayload) = (flag(body, "with_vector"), flag(body, "with_payload"))
+        recs.foreach(rec => a.add(recordToPoint(rec, withVector, withPayload)))
         all.lift(from + limit).map(_.id) match {
           // numeric form only when it round-trips exactly ('007' must
           // come back as the string '007', not 7)

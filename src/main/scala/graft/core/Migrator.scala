@@ -42,6 +42,15 @@ final class TransformException(msg: String, cause: Throwable)
   * The central upgrade: `data` is a lazy, partitioned DataFrame end to end
   * — nothing materializes on the driver (the reference holds the entire
   * dataset as a Python list, `core/migrator.py:69`).
+  *
+  * One run issues these actions, in order:
+  *  1. the empty-extract guard: `isEmpty` on the source scan (bounded);
+  *  2. only when the sink [[graft.connectors.VectorConnector.takesDimension]]
+  *     and the config leaves `load.dimension` open: a `limit(1)` dimension
+  *     probe over the un-fanned pipeline (bounded: it reads the first
+  *     source partitions, not the whole source);
+  *  3. the write, which carries every count of the report on its own
+  *     action (`Dataset.observe`).
   */
 class Migrator(spark: SparkSession) {
 
@@ -66,10 +75,9 @@ class Migrator(spark: SparkSession) {
 
       val extracted = source.read(spark, config.source.connection, query)
 
-      // Empty-extract guard (core/migrator.py:71-74). One cheap action on
+      // Empty-extract guard (core/migrator.py:71-74). One bounded job on
       // the pruned scan; the write below re-reads lazily.
-      val n = extracted.limit(1).count()
-      if (n == 0) {
+      if (extracted.isEmpty) {
         return RunReport(success = false, extracted = 0, written = 0, skipped = 0,
           sourceType = sourceType, targetType = targetType,
           error = Some("no data extracted from source"))
@@ -83,15 +91,16 @@ class Migrator(spark: SparkSession) {
         case Some(n) if n > 0 => extracted.repartition(n)
         case _ => extracted
       }
-      val transformed = effective match {
+      def applyPipeline(df: DataFrame): DataFrame = effective match {
         case Some(f) =>
-          try f(fanned)
+          try f(df)
           catch {
             case e: Exception =>
               throw new TransformException(s"transform failed: ${e.getMessage}", e)
           }
-        case None => fanned
+        case None => df
       }
+      val transformed = applyPipeline(fanned)
 
       // QA counters ride along with the write action (Dataset.observe):
       // rows, missing vectors/ids, mean vector dim — zero extra scans
@@ -105,12 +114,10 @@ class Migrator(spark: SparkSession) {
       // incremental run even when nothing changed.
       val wCol = "__graft_withheld"
       val hasWithheld = transformed.columns.contains(wCol)
-      // probe/schema plan WITHOUT observations: the dimension-inference
-      // probe below runs a bounded action, and an Observation latches on
-      // the FIRST completed action over its plan — probing an observed
-      // plan would freeze the withheld count at the probe's row sample
-      val shipped0 =
-        if (hasWithheld) transformed.filter(!col(wCol)).drop(wCol) else transformed
+      def withoutWithheld(df: DataFrame): DataFrame =
+        if (hasWithheld) df.filter(!col(wCol)).drop(wCol) else df
+      // schema plan WITHOUT observations (see the dimension probe below)
+      val shipped0 = withoutWithheld(transformed)
       // the vector column must be ARRAY-typed for size/avg_dim: a
       // BINARY_VECTOR collection (Canonical.binarySchema) would fail
       // analysis inside observe() and flunk the whole run
@@ -123,6 +130,14 @@ class Migrator(spark: SparkSession) {
       // connector-side inferDim fallback would run a limit(1) probe over
       // the OBSERVED plan, and Observation latches on the FIRST completed
       // action — the report would claim rows=1 for a full migration.
+      // Only sinks that read load.dimension pay for the probe at all, and
+      // it runs over the UN-FANNED pipeline: a limit above the
+      // parallelism shuffle would finish the whole shuffle-map stage
+      // (scan and shuffle the entire source), while a narrow plan's
+      // limit(1) reads only the first source partitions. This branch is
+      // the only place the pipeline is applied a second time; that costs
+      // plan construction plus whatever small reads a step does while it
+      // is built (decontaminate loads its eval set).
       // Pre-resolution is keyed on vectorIsArray, NOT canObserve: a
       // withheld-marked frame lacking the ID column (canObserve false)
       // still carries the withheld observation, and letting the connector
@@ -136,9 +151,9 @@ class Migrator(spark: SparkSession) {
       // would land on — or the connector-side orElse(inferDim) re-probes
       // the observed plan and latches the Observation anyway
       val loadResolved =
-        if (load.dimension.isEmpty && vectorIsArray)
-          load.copy(dimension =
-            graft.model.Canonical.inferDim(shipped0).orElse(Some(0)))
+        if (load.dimension.isEmpty && vectorIsArray && target.takesDimension)
+          load.copy(dimension = graft.model.Canonical.inferDim(
+            withoutWithheld(applyPipeline(extracted))).orElse(Some(0)))
         else load
       // write plan, rebuilt fresh so both observations latch on the write
       // action and nothing else: [transformed] -> withheld observation ->

@@ -100,8 +100,14 @@ object PipelineQueries {
     * Mirrors [[graft.ops.Dedup.connectedComponents]]'s pointer-jumping
     * rounds; 8 rounds cover diameter 256 — the planted pair graphs and the
     * digit-edit customer graph measure ≤ 15 at sf0.1 (validated equal to
-    * the recursive CTE at sf0.001/0.01/0.1). */
-  private def ccUnrolledCtes(e: String, rounds: Int = 8): String = {
+    * the recursive CTE at sf0.001/0.01/0.1).
+    *
+    * Fixpoint assertion: `c` raises a DuckDB error unless the last round
+    * changed no label (`l<rounds>` = `l<rounds-1>`), so a component too
+    * wide for the unrolled horizon fails the oracle loudly instead of
+    * returning a wrong labelling. The check is conservative: a graph that
+    * first converges IN the last round also fails. */
+  private[graft] def ccUnrolledCtes(e: String, rounds: Int = 8): String = {
     val sb = new StringBuilder(
       s"l0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS comp FROM $e)")
     (1 to rounds).foreach { r =>
@@ -112,7 +118,13 @@ object PipelineQueries {
           s"FROM l${r - 1} l LEFT JOIN m$r m USING (id))" +
           s", l$r AS MATERIALIZED (SELECT a1.id, a2.comp FROM a$r a1 JOIN a$r a2 ON a1.comp = a2.id)")
     }
-    sb.append(s", c AS MATERIALIZED (SELECT id, comp FROM l$rounds)")
+    // the CASE is per row over a MATERIALIZED CTE, so the error fires
+    // whenever c has a row and any label moved in the last round
+    sb.append(s", c AS MATERIALIZED (SELECT l.id, CASE WHEN f.moved THEN " +
+      s"error('connected components did not converge in $rounds rounds') " +
+      s"ELSE l.comp END AS comp FROM l$rounds l CROSS JOIN " +
+      s"(SELECT count(*) > 0 AS moved FROM l$rounds x JOIN l${rounds - 1} y " +
+      "USING (id) WHERE x.comp <> y.comp) f)")
     sb.toString
   }
 

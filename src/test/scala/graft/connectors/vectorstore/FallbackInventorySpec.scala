@@ -58,6 +58,9 @@ class FallbackInventorySpec extends SparkSpec {
     override def scrollPageFiltered(name: String, cursor: Option[String], pageSize: Int,
                                     filter: Option[String]): (Seq[VSRecord], Option[String]) =
       inner.scrollPageFiltered(name, cursor, pageSize, filter)
+    override def scrollIdsPageFiltered(name: String, cursor: Option[String], pageSize: Int,
+                                       filter: Option[String]): (Seq[String], Option[String]) =
+      inner.scrollIdsPageFiltered(name, cursor, pageSize, filter)
     override def serverSideFilters: Boolean = inner.serverSideFilters
     override def supportsNativeSearch(metric: String): Boolean =
       inner.supportsNativeSearch(metric)

@@ -127,15 +127,15 @@ class MigratorSpec extends SparkSpec {
     val first = IncrementalMigrator.run(spark, cfg(100))
     assert(first.success && targetCount() == 100, first)
     // identical re-run: the delta must be EMPTY — metadata map and vector
-    // hash equal through the parquet round trip (the observe metric is the
-    // per-run row count; parquet's WriteReport counts the whole dir in
-    // append mode by documented design)
+    // hash equal through the parquet round trip. Both the observe metric
+    // and parquet's WriteReport count the rows THIS run shipped, not the
+    // append-mode directory
     val again = IncrementalMigrator.run(spark, cfg(100))
-    assert(again.success && again.metrics("rows") == "0", again)
+    assert(again.success && again.metrics("rows") == "0" && again.written == 0, again)
     assert(targetCount() == 100)
     // widening ships only the new rows
     val wider = IncrementalMigrator.run(spark, cfg(120))
-    assert(wider.success && wider.metrics("rows") == "20", wider)
+    assert(wider.success && wider.metrics("rows") == "20" && wider.written == 20, wider)
     assert(targetCount() == 120)
   }
 
